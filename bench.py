@@ -127,21 +127,6 @@ def _streaming_bench(spark, sf_dir: str) -> dict:
         out["stream_import_rows_per_sec"] = round(
             n_reports / (time.perf_counter() - t0), 1
         )
-        # same drain through the r8 log-structured merge mode (O(batch)
-        # delta appends) so both ingest paths stay measured per round
-        t0 = time.perf_counter()
-        q = stream_import(
-            spark,
-            inp,
-            os.path.join(base, "store_log"),
-            os.path.join(base, "ckpt_log"),
-            available_now=True,
-            merge_mode="log",
-        )
-        q.awaitTermination()
-        out["stream_import_log_rows_per_sec"] = round(
-            n_reports / (time.perf_counter() - t0), 1
-        )
         t0 = time.perf_counter()
         QUERIES["st88_streaming_neardup_index"](spark, sf_dir).count()
         out["st88_sec_per_batch"] = round((time.perf_counter() - t0) / 4, 3)

@@ -250,37 +250,19 @@ class GraphImporter(MongoGraph):
     same entry point, executed through the batch staging pipeline."""
 
     def import_from_json(self, json_data: dict, is_malicious: bool = False) -> None:
+        from pymongraph_spark.graph import store
         from pymongraph_spark.ingest import importer
 
         reports = self._spark.createDataFrame(
             [(0, json.dumps(json_data))], "ord bigint, value string"
         )
-        # Parse once (eager checkpoint); the graph build and the
-        # update-only fold both read the staging rows.
-        staging = importer.staging_frame(self._spark, reports).localCheckpoint(
-            eager=True
+        incoming = importer.build_graph_tables(
+            importer.staging_frame(self._spark, reports)
         )
-        incoming = importer.build_graph_tables(staging)
         # Reference re-import semantics (graph_importer.py per report):
         # insert_vertex on an EXISTING vertex is a no-op (mongraph.py:
-        # 90-97) — its insert-origin props (detection hash/datetime/
-        # probability, whois contact fields, the seed name/address) keep
-        # the FIRST import's values — while the report's update_vertex
-        # calls (detected_prop, residual fields, graph_importer.py:
-        # 131-168) still $set onto it. So only UPDATE-KIND staging props
-        # merge onto existing vertices; insert-kind props only seed new
-        # vertices. Edges keep first-insert-wins.
-        existing_ids = self._graph.vertices.select("id")
-        updates = (
-            importer.update_props_frame(staging)
-            .join(existing_ids, on="id", how="left_semi")
-            .select("id", "props")
-        )
-        updated = writes.update_vertices(self._graph, updates)
-        merged_v = updated.vertices.unionByName(
-            incoming.vertices.join(existing_ids, on="id", how="left_anti")
-        )
-        merged_e = updated.edges.unionByName(
-            incoming.edges.join(self._graph.edges.select("id"), on="id", how="left_anti")
-        )
-        self._commit(PropertyGraph(merged_v, merged_e))
+        # 90-97), while the report's update_vertex calls (detected_prop,
+        # residual fields, graph_importer.py:131-168) still $set onto it;
+        # edges keep the first insert. That is the store's fold with the
+        # current graph at ordinal 0 and this report at ordinal 1.
+        self._commit(store.fold_graphs(self._graph, incoming))

@@ -55,6 +55,37 @@ EDGE_SCHEMA = T.StructType(
 )
 
 
+def set_props(acc: Column, new: Column) -> Column:
+    """Mongo ``$set`` of map ``new`` onto map ``acc``: new keys win,
+    missing keys keep old values. A NULL ``new`` is no update; a NULL
+    ``acc`` takes ``new`` as is. Overwritten keys are dropped before the
+    concat so the result never depends on mapKeyDedupPolicy."""
+    return (
+        F.when(new.isNull(), acc)
+        .when(acc.isNull(), new)
+        .otherwise(
+            F.map_concat(
+                F.map_filter(acc, lambda k, _: ~F.array_contains(F.map_keys(new), k)),
+                new,
+            )
+        )
+    )
+
+
+def by_ordinal(*fields: str):
+    """``array_sort`` comparator ordering structs by ``fields``
+    lexicographically (structs holding maps are not orderable, so the
+    comparison is spelled out)."""
+
+    def cmp(left: Column, right: Column) -> Column:
+        out = F  # F.when opens the CASE chain, Column.when extends it
+        for f in fields:
+            out = out.when(left[f] < right[f], -1).when(left[f] > right[f], 1)
+        return out.otherwise(0)
+
+    return cmp
+
+
 def vertex_id(label: Column | str, natural_key: Column | str) -> Column:
     """Deterministic vertex id: xxhash64(label, natural key).
 
@@ -83,6 +114,10 @@ class PropertyGraph:
     PropertyGraph — the batch/columnar analogue of the reference's
     per-document CRUD (mongraph.py:71-213). Persisting to parquet keyed by
     label gives partition pruning on label filters.
+
+    A batch graph built from reports (ingest.build_graph_tables) has one
+    more vertex column, ``upd``: the props it ``$set``s on a vertex that
+    already exists in the store (see graph.store.fold).
     """
 
     vertices: DataFrame

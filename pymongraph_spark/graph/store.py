@@ -1,18 +1,28 @@
 """Parquet-backed persistence for PropertyGraph.
 
-Layout: ``{path}/vertices`` (partitioned by label → partition pruning for
-label-filtered scans, the §1.5 physical design) and ``{path}/edges``.
+Layout: ``{path}/{version}/vertices`` (partitioned by label → partition
+pruning for label-filtered scans, the §1.5 physical design) and
+``{path}/{version}/edges``; an atomic ``_CURRENT`` pointer names the live
+version. ``{path}/log/b<batch id>/`` holds appended batches (deltas) that
+no compaction has folded into a version yet.
 
-Mutation model: read-merge-rewrite into a versioned subdirectory with an
-atomic pointer swap (``_CURRENT`` file). At test scale a full rewrite is
-fine; the production path is Delta/Iceberg ``MERGE INTO`` on the same
-tables — every merge below is expressed as a deterministic-key union +
-dropDuplicates, which is exactly the MERGE condition, so swapping the
-storage layer does not change semantics.
+Every graph-store write merges through ONE rule, ``fold``: rows tagged
+with an ordinal are grouped per vertex (id, label) and per edge id; a
+vertex starts from the props of its lowest ordinal and ``$set``s each
+later ordinal's ``upd`` map in order (a batch built from reports carries
+only its update-origin props there, so a later batch never overwrites
+what the first insert wrote — mongraph.py:90-97); an edge keeps its
+lowest-ordinal row (first writer wins). The compacted base version is
+ordinal 0, a delta is its batch id + 1. ``merge_into`` folds one batch
+onto the current version, the log mode (``merge_into_log`` /
+``compact_log`` / ``load_log``) appends deltas and folds them on read or
+at compaction, and the GraphImporter façade folds each report into its
+in-memory graph the same way.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
@@ -20,7 +30,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymongraph_spark.graph.model import EDGE_FIELDS, VERTEX_FIELDS, PropertyGraph
+from pymongraph_spark.graph.model import (
+    EDGE_FIELDS,
+    VERTEX_FIELDS,
+    PropertyGraph,
+    by_ordinal,
+    set_props,
+)
 from pymongraph_spark.session import run_concurrently
 
 
@@ -32,36 +48,17 @@ def _current_version(path: str) -> str | None:
         return fh.read().strip()
 
 
-def _delta_layout(path: str) -> bool:
-    """True when ``path`` holds a Delta-format store (written by
-    _merge_into_delta). Probed from the on-disk layout, not the runtime,
-    so readers stay consistent with whatever backend actually wrote."""
-    return os.path.isdir(os.path.join(path, "delta_vertices", "_delta_log"))
-
-
 def versions(path: str) -> list[str]:
-    """Retained version ids, oldest → newest (the Delta history analogue).
-
-    Format-aware: a Delta-layout store reports its commit versions from
-    the _delta_log (readable without the runtime); the parquet layout
-    reports its version-swap directories.
-    """
-    if _delta_layout(path):
-        log = os.path.join(path, "delta_vertices", "_delta_log")
-        # sort numerically: lexicographic string order breaks at commit
-        # 10 ('10' < '2'), which would make versions()[-1] — the "just
-        # written" idiom every caller uses — point at the wrong snapshot
-        return sorted(
-            (
-                (f.split(".")[0].lstrip("0") or "0")
-                for f in os.listdir(log)
-                if f.endswith(".json") and f.split(".")[0].isdigit()
-            ),
-            key=int,
-        )
+    """Retained version ids, oldest → newest (the Delta history analogue)."""
     if not os.path.isdir(path):
         return []
     return sorted(d for d in os.listdir(path) if d.startswith("v") and d[1:].isdigit())
+
+
+def _gc_grace_seconds() -> float:
+    """Age a superseded version or drained delta must reach before it is
+    deleted, read at call time so tests can set it after import."""
+    return float(os.environ.get("SPARKGRAPH_GC_GRACE_SECONDS", "1800"))
 
 
 def save(g: PropertyGraph, path: str, keep_versions: int = 2) -> str:
@@ -95,7 +92,7 @@ def save(g: PropertyGraph, path: str, keep_versions: int = 2) -> str:
     # older than the grace window (the version id IS its commit time in
     # ms), so a concurrent time-travel reader of a just-superseded
     # version can finish its scan — it gets collected on a later save.
-    grace_ms = 1000 * int(os.environ.get("SPARKGRAPH_GC_GRACE_SECONDS", "1800"))
+    grace_ms = 1000 * _gc_grace_seconds()
     now_ms = int(time.time() * 1000)
     for stale in versions(path)[: -max(keep_versions, 1)]:
         if now_ms - int(stale[1:]) > grace_ms:
@@ -106,30 +103,7 @@ def save(g: PropertyGraph, path: str, keep_versions: int = 2) -> str:
 def load(
     spark: SparkSession, path: str, version: str | None = None
 ) -> PropertyGraph | None:
-    """Load the current version, or a retained older one (time travel).
-
-    Format-aware: routes by the store's on-disk layout, so a graph merged
-    through the Delta backend is readable through the same API (including
-    ``version`` → Delta ``versionAsOf`` time travel). A Delta-layout
-    store read in a session without the Delta runtime fails loudly rather
-    than returning None as if the store were empty.
-    """
-    if _delta_layout(path):
-        if lakehouse_format(spark) != "delta":
-            raise RuntimeError(
-                f"store at {path!r} is Delta-format but this session has no "
-                "delta runtime; install delta-spark or load from a parquet "
-                "store"
-            )
-        vreader = spark.read.format("delta")
-        ereader = spark.read.format("delta")
-        if version is not None:
-            vreader = vreader.option("versionAsOf", version)
-            ereader = ereader.option("versionAsOf", version)
-        return PropertyGraph(
-            vreader.load(os.path.join(path, "delta_vertices")).select(VERTEX_FIELDS),
-            ereader.load(os.path.join(path, "delta_edges")).select(EDGE_FIELDS),
-        )
+    """Load the current version, or a retained older one (time travel)."""
     if version is None:
         # log-mode stores: the CURRENT logical state includes pending
         # delta appends — fold them transparently so no reader can
@@ -171,8 +145,6 @@ def changes(
     Returns a DataFrame (entity, op, id, label) — 'vertex'/'edge' ×
     'insert'/'delete'.
     """
-    from pyspark.sql import functions as F
-
     a = load(spark, path, version=v_from)
     b = load(spark, path, version=v_to)
     if a is None or b is None:
@@ -427,165 +399,106 @@ def k_hop_bucketed(
     return visited, edges
 
 
-def lakehouse_format(spark: SparkSession) -> str | None:
-    """Probe (once per session) for a transactional table format.
-
-    Returns ``"delta"`` when the delta-spark package AND its JVM classes
-    are on this session's classpath, else ``None`` → the parquet
-    version-swap fallback below. SURVEY §7 names Delta/Iceberg MERGE as
-    the production mutation path; this container ships neither, so the
-    probe exists to route automatically the moment one is installed —
-    semantics don't change because every merge is already expressed as a
-    deterministic-key union/dropDuplicates, which is exactly the MERGE
-    condition.
-    """
-    # memoized as an attribute ON the session object: an id()-keyed module
-    # dict would both leak entries for dead sessions and serve a stale
-    # probe result if CPython recycles the id for a new session
-    memo = "_sparkgraph_lakehouse_format"
-    if not hasattr(spark, memo):
-        fmt = None
-        try:
-            import delta  # noqa: F401  (delta-spark python bindings)
-
-            # classpath check: the python package without the jars still
-            # fails at write time — probe the JVM class directly.
-            spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-            fmt = "delta"
-        except Exception:
-            fmt = None
-        setattr(spark, memo, fmt)
-    return getattr(spark, memo)
-
-
-def _merge_into_delta(spark: SparkSession, path: str, new: PropertyGraph) -> PropertyGraph:
-    """MERGE INTO upsert via Delta (only reachable when lakehouse_format
-    returns 'delta'). Same contract as the parquet fallback: new vertex
-    props win per key, first edge writer wins."""
-    from delta.tables import DeltaTable
-
-    vpath, epath = os.path.join(path, "delta_vertices"), os.path.join(path, "delta_edges")
-    if not DeltaTable.isDeltaTable(spark, vpath):
-        new.vertices.select(VERTEX_FIELDS).write.format("delta").save(vpath)
-        new.edges.select(EDGE_FIELDS).write.format("delta").save(epath)
-    else:
-        (
-            DeltaTable.forPath(spark, vpath)
-            .alias("t")
-            .merge(new.vertices.alias("s"), "t.id = s.id AND t.label = s.label")
-            .whenMatchedUpdate(set={"props": "map_concat(map_filter(t.props, (k, v) -> NOT array_contains(map_keys(s.props), k)), s.props)"})
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        (
-            DeltaTable.forPath(spark, epath)
-            .alias("t")
-            .merge(new.edges.alias("s"), "t.id = s.id")
-            .whenNotMatchedInsertAll()  # first writer wins — no update clause
-            .execute()
-        )
-    return PropertyGraph(
-        spark.read.format("delta").load(vpath).select(VERTEX_FIELDS),
-        spark.read.format("delta").load(epath).select(EDGE_FIELDS),
+def _tag(g: PropertyGraph, ordinal) -> tuple[DataFrame, DataFrame]:
+    """``g``'s frames in fold layout: vertices (id, label, props, upd,
+    __ord), edges (EDGE_FIELDS, __ord). A graph without an ``upd``
+    column gets NULL there, which the fold reads as ``upd = props``."""
+    ordinal = F.lit(ordinal) if isinstance(ordinal, int) else ordinal
+    v = g.vertices
+    upd = v["upd"] if "upd" in v.columns else F.lit(None).cast("map<string,string>")
+    return (
+        v.select(*VERTEX_FIELDS, upd.alias("upd"), ordinal.cast("bigint").alias("__ord")),
+        g.edges.select(*EDGE_FIELDS, ordinal.cast("bigint").alias("__ord")),
     )
 
 
-def merge_into(
-    spark: SparkSession, path: str, new: PropertyGraph, backend: str = "auto"
-) -> PropertyGraph:
-    """Upsert a batch graph into the store (the foreachBatch target).
+def fold(tagged: list[tuple[DataFrame, DataFrame]]) -> PropertyGraph:
+    """The one merge rule of every graph-store write, over (vertices,
+    edges) frame pairs tagged by ``_tag`` (lazy; one groupBy per entity,
+    however many pairs or ordinals).
 
-    Vertices: existing and new full-outer on id; on conflict, new props
-    overwrite per key (update/$set semantics across batches — a later
-    report's updates win, matching sequential reference imports). Replays
-    are idempotent: identical batch → identical props → no visible change.
-    Edges: union + dedup on id (first writer wins).
-
-    ``backend``: "parquet", "delta", or "auto". Auto is LAYOUT-STICKY:
-    an existing store keeps the format it was created with regardless of
-    what runtimes are installed (installing delta-spark must never make a
-    parquet store's history invisible); only a brand-new store routes by
-    the runtime probe. Delta MERGE gives concurrent writers optimistic
-    transactional conflict detection; parquet is the single-writer
-    version-swap below. load()/versions() read both layouts.
+    - vertex (id, label): start from the props of its lowest ordinal,
+      then ``$set`` each later ordinal's ``upd`` (its ``props`` where upd
+      is NULL) in ordinal order. A NULL map changes nothing, so a vertex
+      seen only with NULL props stays NULL.
+    - edge id: the lowest ordinal's row wins (first writer); ordinal
+      ties are identical rows.
     """
-    if backend == "auto":
-        if _delta_layout(path):
-            backend = "delta"
-        elif _current_version(path) is not None:
-            backend = "parquet"
-        else:
-            backend = "delta" if lakehouse_format(spark) == "delta" else "parquet"
-    if backend == "delta":
-        return _merge_into_delta(spark, path, new)
-    if backend != "parquet":
-        raise ValueError(f"unknown backend {backend!r}; use 'auto', 'parquet', or 'delta'")
-    # mode-mixing guard: pending log deltas must be COMPACTED (which
-    # advances the replay watermark and drains the log), not just folded
-    # into this merge's snapshot — otherwise a later read would re-apply
-    # them on top of the new version and old batches could re-win props
+    rows = F.array_sort(F.collect_list(F.struct("__ord", "props", "upd")), by_ordinal("__ord"))
+    vertices = functools.reduce(DataFrame.unionByName, [v for v, _ in tagged])
+    edges = functools.reduce(DataFrame.unionByName, [e for _, e in tagged])
+    v = (
+        vertices.groupBy("id", "label")
+        .agg(rows.alias("__rows"))
+        .select(
+            "id",
+            "label",
+            F.aggregate(
+                F.slice("__rows", 2, F.size("__rows")),
+                F.col("__rows")[0]["props"],
+                lambda acc, r: set_props(acc, F.coalesce(r["upd"], r["props"])),
+            ).alias("props"),
+        )
+    )
+    e = (
+        edges.groupBy("id")
+        .agg(F.min_by(F.struct(*EDGE_FIELDS), F.col("__ord")).alias("__e"))
+        .select("__e.*")
+    )
+    return PropertyGraph(v, e)
+
+
+def fold_graphs(*graphs: PropertyGraph) -> PropertyGraph:
+    """Fold in-memory graphs, the i-th at ordinal i (oldest first)."""
+    return fold([_tag(g, i) for i, g in enumerate(graphs)])
+
+
+def _commit(path: str, g: PropertyGraph) -> PropertyGraph:
+    """Materialize ``g`` and save it as the new version. The checkpoint
+    comes BEFORE the pointer swap: lazy plans must not read a version
+    dir that retention may later delete."""
+    g = PropertyGraph(
+        *run_concurrently(
+            lambda: g.vertices.localCheckpoint(eager=True),
+            lambda: g.edges.localCheckpoint(eager=True),
+        )
+    )
+    save(g, path)
+    return g
+
+
+def merge_into(spark: SparkSession, path: str, new: PropertyGraph) -> PropertyGraph:
+    """Upsert one batch graph into the store and return the result: the
+    current version at ordinal 0, ``new`` at ordinal 1, through ``fold``
+    (the log mode with a compaction after every batch). Replays are
+    idempotent: a batch's ``upd`` is already part of what it wrote.
+
+    Pending log deltas are compacted first (which advances the replay
+    watermark and drains the log); folding them into this snapshot alone
+    would let a later read re-apply them on top of the new version. The
+    batch itself takes no stream batch id, so a stream appending to the
+    same store keeps its own ids.
+    """
     if _committed_deltas(path):
         compact_log(spark, path)
     existing = load(spark, path)
-    if existing is None:
-        merged = new
-    else:
-        ev = existing.vertices.select("id", "label", F.col("props").alias("__old"))
-        nv = new.vertices.select("id", "label", F.col("props").alias("__new"))
-        vertices = (
-            ev.join(nv, on=["id", "label"], how="full_outer")
-            .select(
-                "id",
-                "label",
-                F.when(F.col("__old").isNull(), F.col("__new"))
-                .when(F.col("__new").isNull(), F.col("__old"))
-                .otherwise(
-                    F.map_concat(
-                        F.map_filter(
-                            F.col("__old"),
-                            lambda k, _: ~F.array_contains(F.map_keys(F.col("__new")), k),
-                        ),
-                        F.col("__new"),
-                    )
-                )
-                .alias("props"),
-            )
-        )
-        edges = (
-            existing.edges.unionByName(
-                new.edges.join(existing.edges.select("id"), on="id", how="left_anti")
-            )
-        )
-        merged = PropertyGraph(vertices, edges)
-    # Materialize BEFORE the pointer swap (lazy plans must not read the
-    # version dir we are about to replace).
-    merged = PropertyGraph(
-        *run_concurrently(
-            lambda: merged.vertices.localCheckpoint(eager=True),
-            lambda: merged.edges.localCheckpoint(eager=True),
-        )
-    )
-    save(merged, path)
-    return merged
+    return _commit(path, fold_graphs(new) if existing is None else fold_graphs(existing, new))
 
 
 # --------------------------------------------------------------------------
 # Log-structured merge (LSM) mode for streaming ingest. merge_into above
-# is read-merge-rewrite: per batch it loads the WHOLE store, joins, and
-# rewrites a full version — O(accumulated store) per micro-batch, which a
-# long-running stream cannot afford (the cost grows forever while batches
-# stay the same size; SCALE.md documents the curve). The log mode writes
-# each batch as an immutable DELTA directory under {path}/log — O(batch)
-# per micro-batch, the write pattern of every LSM store — and folds the
-# pending deltas on READ (cost bounded by compact_every); a compaction
-# folds base + deltas into a normal full version and drains the log.
+# rewrites a full version per batch — O(accumulated store), which a
+# long-running stream cannot afford (SCALE.md documents the curve). The
+# log mode writes each batch as an immutable DELTA directory under
+# {path}/log — O(batch) per micro-batch — and folds the pending deltas on
+# READ (cost bounded by compact_every); a compaction folds base + deltas
+# into a normal full version and drains the log. Both run ``fold``, so
+# compacting after every batch, every 2 or every 100 give the same state
+# (test_streaming_ingest.py::test_log_mode_equals_sequential_full_merges
+# and the hypothesis property in test_properties.py). A delta keeps the
+# batch's ``upd`` column; deltas written before that column existed read
+# it as NULL, i.e. ``upd = props`` — plain $set, as they were folded then.
 #
-# Semantics are IDENTICAL to sequential merge_into calls, pinned by
-# test_streaming_ingest.py::test_log_mode_equals_sequential_full_merges:
-#   - vertices: per (id, label), props fold in batch order with
-#     later-key-wins ($set across batches) — the same fold expression as
-#     writes._fold_updates, generalized to the (id, label) key;
-#   - edges: first writer wins per id (min batch ordinal).
 # Replays are idempotent twice over: a delta dir is keyed by the caller's
 # batch_id (foreachBatch replays rewrite the SAME dir — a _COMMITTED
 # marker distinguishes a torn first attempt from a finished one), and a
@@ -758,8 +671,10 @@ def release_log_lease(path: str) -> None:
 # spark.read.parquet fails schema inference on it — the property test
 # test_log_merge_equals_sequential_full_merge found exactly that with a
 # vertices-only (or edges-only) micro-batch. An explicit schema makes
-# the empty dir read as an empty frame, which is what it is.
+# the empty dir read as an empty frame, which is what it is. A delta's
+# vertices also carry ``upd`` (see fold); one read without it is NULL.
 _VERTEX_DDL = "id BIGINT, label STRING, props MAP<STRING,STRING>"
+_DELTA_VERTEX_DDL = _VERTEX_DDL + ", upd MAP<STRING,STRING>"
 _EDGE_DDL = "id BIGINT, src BIGINT, dst BIGINT, label STRING, props MAP<STRING,STRING>"
 
 
@@ -794,6 +709,15 @@ def _committed_deltas(path: str) -> list[str]:
     )
 
 
+def next_batch_id(path: str) -> int:
+    """A batch id above every id the store's log has seen (pending,
+    torn, or folded into the base)."""
+    log = _log_dir(path)
+    names = os.listdir(log) if os.path.isdir(log) else []
+    seen = [int(d[1:]) for d in names if d.startswith("b") and d[1:].isdigit()]
+    return max([_compacted_through(path), *seen]) + 1
+
+
 def merge_into_log(
     spark: SparkSession,
     path: str,
@@ -824,8 +748,9 @@ def merge_into_log(
     if not os.path.exists(os.path.join(bdir, "_COMMITTED")):
         # torn previous attempt (dir without marker) → rewrite it
         shutil.rmtree(bdir, ignore_errors=True)
+        vcols = [c for c in (*VERTEX_FIELDS, "upd") if c in new.vertices.columns]
         run_concurrently(
-            lambda: new.vertices.select(VERTEX_FIELDS).write.parquet(
+            lambda: new.vertices.select(vcols).write.parquet(
                 os.path.join(bdir, "vertices")
             ),
             lambda: new.edges.select(EDGE_FIELDS).write.parquet(
@@ -841,11 +766,8 @@ def merge_into_log(
 def _fold_log(
     spark: SparkSession, path: str, deltas: list[str]
 ) -> PropertyGraph | None:
-    """Fold base version + pending deltas into one PropertyGraph (lazy).
-
-    The fold is a single groupBy per entity over base ∪ deltas tagged
-    with their batch ordinal — one shuffle keyed by (id, label) / id,
-    independent of how many deltas are pending (never a join per delta).
+    """Fold base version (ordinal 0) + pending deltas (batch id + 1)
+    into one PropertyGraph (lazy) through ``fold``.
 
     All pending deltas are read in ONE multi-path parquet scan per
     entity, with the ordinal decoded from the file path (the dir name IS
@@ -881,93 +803,25 @@ def _fold_log(
         ).otherwise(_raw_ord)
         + 1
     )
-    frames_v, frames_e = [], []
+    tagged = []
     if version is not None and os.path.isdir(os.path.join(path, version)):
         vdir = os.path.join(path, version)
-        frames_v.append(
-            spark.read.schema(_VERTEX_DDL).parquet(os.path.join(vdir, "vertices"))
-            .select(VERTEX_FIELDS)
-            .withColumn("__ord", F.lit(0).cast("bigint"))
+        base = PropertyGraph(
+            spark.read.schema(_VERTEX_DDL).parquet(os.path.join(vdir, "vertices")),
+            spark.read.schema(_EDGE_DDL).parquet(os.path.join(vdir, "edges")),
         )
-        frames_e.append(
-            spark.read.schema(_EDGE_DDL).parquet(os.path.join(vdir, "edges"))
-            .select(EDGE_FIELDS)
-            .withColumn("__ord", F.lit(0).cast("bigint"))
-        )
+        tagged.append(_tag(base, 0))
     if deltas:
-        frames_v.append(
-            spark.read.schema(_VERTEX_DDL)
-            .parquet(*[os.path.join(log, d, "vertices") for d in deltas])
-            .select(*VERTEX_FIELDS, delta_ord.alias("__ord"))
+        pending = PropertyGraph(
+            spark.read.schema(_DELTA_VERTEX_DDL).parquet(
+                *[os.path.join(log, d, "vertices") for d in deltas]
+            ),
+            spark.read.schema(_EDGE_DDL).parquet(
+                *[os.path.join(log, d, "edges") for d in deltas]
+            ),
         )
-        frames_e.append(
-            spark.read.schema(_EDGE_DDL)
-            .parquet(*[os.path.join(log, d, "edges") for d in deltas])
-            .select(*EDGE_FIELDS, delta_ord.alias("__ord"))
-        )
-    if not frames_v:
-        return None
-    av, ae = frames_v[0], frames_e[0]
-    for fv in frames_v[1:]:
-        av = av.unionByName(fv)
-    for fe in frames_e[1:]:
-        ae = ae.unionByName(fe)
-
-    def _by_ord(left, right):  # structs with map fields aren't orderable
-        return (
-            F.when(left["__ord"] < right["__ord"], -1)
-            .when(left["__ord"] > right["__ord"], 1)
-            .otherwise(0)
-        )
-
-    vertices = (
-        av.groupBy("id", "label")
-        .agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("__ord"), F.col("props").alias("p"))),
-                    _by_ord,
-                ),
-                F.expr("map()").cast("map<string,string>"),
-                # later batches win per key — $set across batches, the
-                # exact merge_into / _fold_updates algebra. NULL props act
-                # as "no update" (merge_into's when(__new.isNull(), __old)),
-                # hence the coalesce; map_concat with a NULL operand would
-                # otherwise NULL the whole accumulator.
-                lambda acc, s: F.map_concat(
-                    F.map_filter(
-                        acc,
-                        lambda k, _: ~F.array_contains(
-                            F.map_keys(F.coalesce(s["p"], F.expr("map()"))), k
-                        ),
-                    ),
-                    F.coalesce(s["p"], F.expr("map()")),
-                ),
-            ).alias("__folded"),
-            # a vertex seen ONLY with NULL props stays NULL (merge_into
-            # never invents an empty map for it)
-            F.max(F.col("props").isNotNull()).alias("__has_any"),
-        )
-        .select(
-            "id",
-            "label",
-            F.when(F.col("__has_any"), F.col("__folded")).alias("props"),
-        )
-        .select(VERTEX_FIELDS)
-    )
-    edges = (
-        ae.groupBy("id")
-        .agg(
-            # first writer wins per id (merge_into keeps existing edges);
-            # min_by on the full struct — ordinal ties are identical rows
-            F.min_by(F.struct(*[F.col(c) for c in EDGE_FIELDS]), F.col("__ord")).alias(
-                "__e"
-            )
-        )
-        .select("__e.*")
-        .select(EDGE_FIELDS)
-    )
-    return PropertyGraph(vertices, edges)
+        tagged.append(_tag(pending, delta_ord))
+    return fold(tagged) if tagged else None
 
 
 def load_log(spark: SparkSession, path: str) -> PropertyGraph | None:
@@ -1004,7 +858,7 @@ def _sweep_drained_deltas(path: str) -> None:
     if not os.path.isdir(log):
         return
     wm = _compacted_through(path)
-    grace = float(os.environ.get("SPARKGRAPH_GC_GRACE_SECONDS", "1800"))
+    grace = _gc_grace_seconds()
     now = time.time()
     for d in os.listdir(log):
         if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= wm:
@@ -1045,13 +899,7 @@ def compact_log(spark: SparkSession, path: str) -> PropertyGraph | None:
     folded = _fold_log(spark, path, deltas)
     if folded is None or not deltas:
         return folded
-    folded = PropertyGraph(
-        *run_concurrently(
-            lambda: folded.vertices.localCheckpoint(eager=True),
-            lambda: folded.edges.localCheckpoint(eager=True),
-        )
-    )
-    save(folded, path)
+    folded = _commit(path, folded)
     # advance the watermark BEFORE dropping the deltas: a crash between
     # the two leaves already-folded dirs that merge_into_log now ignores
     # and a later compaction sweeps

@@ -10,8 +10,7 @@ Reference semantics preserved:
 - D1 delete_node (mongraph.py:153-181): cascading delete of incident edges
   in BOTH directions — batch form is a left anti-join.
 - U1/U2 update_* (mongraph.py:195-213): Mongo ``$set`` merge — new keys
-  win, missing keys keep old values → ``map_concat`` with new-side
-  precedence.
+  win, missing keys keep old values (model.set_props).
 
 All functions are pure: they take and return PropertyGraph. No
 read-modify-write races exist because ids are pure functions of keys.
@@ -28,7 +27,9 @@ from pymongraph_spark.graph.model import (
     VERTEX_FIELDS,
     PropertyGraph,
     _as_predicate,
+    by_ordinal,
     edge_id,
+    set_props,
     vertex_id,
 )
 
@@ -158,96 +159,39 @@ def _fold_updates(updates: DataFrame) -> DataFrame:
     partition layout) — callers with conflicting duplicate-id updates
     downstream of a shuffle must pass ``ord``."""
     if "ord" in updates.columns:
-        u = updates.select(
-            "id",
-            F.col("props").alias("__new_props"),
-            F.col("ord").cast("bigint").alias("__ord"),
-        )
+        u = updates.select("id", "props", F.col("ord").cast("bigint").alias("ord"))
     else:
-        u = updates.select("id", F.col("props").alias("__new_props")).withColumn(
-            "__ord", F.monotonically_increasing_id()
-        )
+        u = updates.select("id", "props").withColumn("ord", F.monotonically_increasing_id())
+    return u.groupBy("id").agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("ord", "props")), by_ordinal("ord")),
+            F.lit(None).cast("map<string,string>"),
+            lambda acc, s: set_props(acc, s["props"]),
+        ).alias("__new_props")
+    )
 
-    def _by_ord(left, right):  # structs with map fields aren't orderable
-        return (
-            F.when(left["__ord"] < right["__ord"], -1)
-            .when(left["__ord"] > right["__ord"], 1)
-            .otherwise(0)
-        )
 
+def _apply_updates(frame: DataFrame, updates: DataFrame, fields: list[str]) -> DataFrame:
     return (
-        u.groupBy("id")
-        .agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("__ord"), F.col("__new_props").alias("p"))),
-                    _by_ord,
-                ),
-                F.expr("map()").cast("map<string,string>"),
-                lambda acc, s: F.map_concat(
-                    F.map_filter(
-                        acc, lambda k, _: ~F.array_contains(F.map_keys(s["p"]), k)
-                    ),
-                    s["p"],
-                ),
-            ).alias("__new_props")
-        )
+        frame.join(_fold_updates(updates), on="id", how="left")
+        .withColumn("props", set_props(F.col("props"), F.col("__new_props")))
+        .select(fields)
     )
 
 
 def update_vertices(g: PropertyGraph, updates: DataFrame) -> PropertyGraph:
     """U1 batch property merge (mongraph.py:195-203). ``updates`` has
     columns [id, props: map] plus an optional ``ord`` bigint giving the
-    application order for duplicate ids; $set semantics = map_concat with
-    update keys winning. Duplicate ids in ``updates`` are folded in that
-    order first (sequential update_one semantics), never fanned out."""
-    u = _fold_updates(updates)
-    merged = (
-        g.vertices.join(u, on="id", how="left")
-        .withColumn(
-            "props",
-            F.when(
-                F.col("__new_props").isNotNull(),
-                # $set: drop overwritten keys first — plain map_concat throws
-                # DUPLICATED_MAP_KEY under the default dedup policy
-                F.map_concat(
-                    F.map_filter(
-                        F.coalesce(F.col("props"), F.expr("map()")),
-                        lambda k, _: ~F.array_contains(F.map_keys(F.col("__new_props")), k),
-                    ),
-                    F.col("__new_props"),
-                ),
-            ).otherwise(F.col("props")),
-        )
-        .select(VERTEX_FIELDS)
-    )
-    return PropertyGraph(merged, g.edges)
+    application order for duplicate ids; $set semantics (model.set_props).
+    Duplicate ids in ``updates`` are folded in that order first
+    (sequential update_one semantics), never fanned out."""
+    return PropertyGraph(_apply_updates(g.vertices, updates, VERTEX_FIELDS), g.edges)
 
 
 def update_edges(g: PropertyGraph, updates: DataFrame) -> PropertyGraph:
     """U2 — same merge on edges (mongraph.py:205-213), duplicate update
     ids folded like update_vertices."""
-    u = _fold_updates(updates)
-    merged = (
-        g.edges.join(u, on="id", how="left")
-        .withColumn(
-            "props",
-            F.when(
-                F.col("__new_props").isNotNull(),
-                # $set: drop overwritten keys first — plain map_concat throws
-                # DUPLICATED_MAP_KEY under the default dedup policy
-                F.map_concat(
-                    F.map_filter(
-                        F.coalesce(F.col("props"), F.expr("map()")),
-                        lambda k, _: ~F.array_contains(F.map_keys(F.col("__new_props")), k),
-                    ),
-                    F.col("__new_props"),
-                ),
-            ).otherwise(F.col("props")),
-        )
-        .select(EDGE_FIELDS)
-    )
-    return PropertyGraph(g.vertices, merged)
+    return PropertyGraph(g.vertices, _apply_updates(g.edges, updates, EDGE_FIELDS))
 
 
 def delete_vertices(g: PropertyGraph, target) -> PropertyGraph:

@@ -46,7 +46,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymongraph_spark.graph.model import PropertyGraph, edge_id, vertex_id
+from pymongraph_spark.graph.model import (
+    VERTEX_FIELDS,
+    PropertyGraph,
+    by_ordinal,
+    edge_id,
+    set_props,
+    vertex_id,
+)
 from pymongraph_spark.session import run_concurrently
 
 # graph_importer.py:11-23 — relation fields not copied as plain properties.
@@ -113,7 +120,7 @@ def flatten_report(report: dict, ord_: int = 0) -> list[tuple]:
             dst[0] if dst else None, dst[1] if dst else None,
             edge_label,
             # `is not None`: an EMPTY props dict must become an empty map,
-            # not NULL — map_concat(acc, NULL) nulls the whole vertex fold
+            # not NULL (a NULL-props insert would seed a NULL vertex map)
             {k: ("" if v is None else str(v)) for k, v in props.items()}
             if props is not None
             else None,
@@ -261,65 +268,22 @@ def corrupt_records(staging: DataFrame) -> DataFrame:
     )
 
 
-def _cmp_ord_seq(l, r):  # maps aren't orderable → compare (ord, seq) explicitly
-    return (
-        F.when(l["ord"] < r["ord"], -1)
-        .when(l["ord"] > r["ord"], 1)
-        .when(l["seq"] < r["seq"], -1)
-        .when(l["seq"] > r["seq"], 1)
-        .otherwise(0)
-    )
-
-
-def _set_fold(base_col, upds_col):
-    """$set-fold an (ord,seq)-sorted array of update structs onto a base
-    map: later keys win. Overwritten keys are dropped from the
-    accumulator before concat — explicit so we don't depend on
-    mapKeyDedupPolicy."""
-    return F.when(upds_col.isNull(), base_col).otherwise(
-        F.aggregate(
-            upds_col,
-            base_col,
-            lambda acc, u: F.map_concat(
-                F.map_filter(
-                    acc, lambda k, _: ~F.array_contains(F.map_keys(u["props"]), k)
-                ),
-                u["props"],
-            ),
-        )
-    )
-
-
 def _update_folds(staging: DataFrame) -> DataFrame:
-    """(label, key) → (ord,seq)-sorted array of update-kind props."""
+    """(label, key) → ``upd``: the update-kind props folded in (ord, seq)
+    order, later keys winning ($set, model.set_props)."""
     return (
         staging.filter(F.col("kind") == "u")
-        # a NULL-props update is a no-op; letting it into the fold would
-        # null the accumulator (map_concat(acc, NULL) = NULL)
-        .filter(F.col("props").isNotNull())
         .groupBy("label", "key")
         .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ord", "seq", "props")), _cmp_ord_seq
-            ).alias("upds")
+            F.aggregate(
+                F.array_sort(
+                    F.collect_list(F.struct("ord", "seq", "props")),
+                    by_ordinal("ord", "seq"),
+                ),
+                F.lit(None).cast("map<string,string>"),
+                lambda acc, u: set_props(acc, u["props"]),
+            ).alias("upd")
         )
-    )
-
-
-def update_props_frame(staging: DataFrame) -> DataFrame:
-    """(id, props) of ONLY the update-kind staging rows, folded in
-    (ord, seq) order with later keys winning.
-
-    This is what the reference's re-import applies to an ALREADY-EXISTING
-    vertex: insert_vertex on an existing vertex is a no-op
-    (mongraph.py:90-97), so only the report's update_vertex calls
-    (detected_prop, residual fields — graph_importer.py:131-168) land.
-    Insert-origin props must never overwrite an existing vertex's values."""
-    return _update_folds(staging).select(
-        vertex_id(F.col("label"), F.col("key")).alias("id"),
-        _set_fold(F.expr("map()").cast("map<string,string>"), F.col("upds")).alias(
-            "props"
-        ),
     )
 
 
@@ -334,6 +298,10 @@ def build_graph_tables(staging: DataFrame) -> PropertyGraph:
       reference's update_vertex ordering.
     - vertex props: first insert wins, then updates fold left in
       (ord, seq) order with later keys winning ($set semantics).
+    - vertex ``upd``: the updates alone, folded the same way (an empty
+      map when the batch has none). It is what this batch may change on
+      a vertex that already exists: the store fold applies it, never the
+      insert-origin props (mongraph.py:90-97 — re-inserting is a no-op).
     - edges: dedup on (src, dst, label), first occurrence's props win.
 
     The staging frame (Python JSON parse — the one genuinely expensive
@@ -354,14 +322,11 @@ def build_graph_tables(staging: DataFrame) -> PropertyGraph:
     base = inserts.groupBy("label", "key").agg(
         F.min_by("props", F.struct("ord", "seq")).alias("base_props")
     )
-    upd = _update_folds(staging)
-    vertices = (
-        base.join(upd, on=["label", "key"], how="left")
-        .select(
-            vertex_id(F.col("label"), F.col("key")).alias("id"),
-            "label",
-            _set_fold(F.col("base_props"), F.col("upds")).alias("props"),
-        )
+    vertices = base.join(_update_folds(staging), on=["label", "key"], how="left").select(
+        vertex_id(F.col("label"), F.col("key")).alias("id"),
+        "label",
+        set_props(F.col("base_props"), F.col("upd")).alias("props"),
+        F.coalesce("upd", F.expr("map()").cast("map<string,string>")).alias("upd"),
     )
 
     edges = (
@@ -400,4 +365,5 @@ def import_from_json(spark: SparkSession, reports: list[dict] | DataFrame) -> Pr
     if isinstance(reports, list):
         rows = [(i, json.dumps(r)) for i, r in enumerate(reports)]
         reports = spark.createDataFrame(rows, "ord bigint, value string")
-    return build_graph_tables(staging_frame(spark, reports))
+    g = build_graph_tables(staging_frame(spark, reports))
+    return PropertyGraph(g.vertices.select(VERTEX_FIELDS), g.edges)

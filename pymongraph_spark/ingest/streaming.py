@@ -1,14 +1,17 @@
 """Streaming ingest (SURVEY.md §2.11): the reference has no streaming at
 all — ingestion is synchronous per-document RPCs. Here the same staging
 transform as batch (importer.py) runs per micro-batch under Structured
-Streaming, with ``foreachBatch`` merging into the parquet graph store.
+Streaming, with ``foreachBatch`` appending each batch to the parquet graph
+store's log (store.merge_into_log).
 
-Exactly-once-effective: ids are pure functions of natural keys and the
-store merge is an idempotent upsert, so micro-batch replays after failure
-converge to the same graph.
+Exactly-once-effective: ids are pure functions of natural keys and a
+batch's delta is keyed by its batch id, so micro-batch replays after
+failure converge to the same graph.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -18,6 +21,25 @@ from pymongraph_spark.graph import store
 from pymongraph_spark.ingest.importer import build_graph_tables, staging_frame
 
 
+def _batch_offset(checkpoint_dir: str, store_path: str) -> int:
+    """Store batch id of this checkpoint's micro-batch 0.
+
+    A stream's batch ids restart at 0 with every new checkpoint, while
+    the store skips ids at or below its compaction watermark (that is
+    how a replayed batch stays exactly-once). So a checkpoint starts
+    after every id the store has seen, and keeps that offset so replays
+    of its batches map to the same store ids.
+    """
+    marker = os.path.join(checkpoint_dir, "sparkgraph_batch_offset")
+    if not os.path.exists(marker):
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        with open(marker + ".tmp", "w") as fh:
+            fh.write(str(store.next_batch_id(store_path)))
+        os.replace(marker + ".tmp", marker)
+    with open(marker) as fh:
+        return int(fh.read())
+
+
 def stream_import(
     spark: SparkSession,
     input_dir: str,
@@ -25,7 +47,7 @@ def stream_import(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    merge_mode: str = "full",
+    merge_mode: str = "log",
     compact_every: int = 16,
 ) -> StreamingQuery:
     """Watch ``input_dir`` for text files (one JSON report per line) and
@@ -37,13 +59,15 @@ def stream_import(
     availableNow this slices a backfill into several idempotent merges
     (the replay/convergence story under test in st87).
 
-    ``merge_mode``: "full" is the read-merge-rewrite version-swap store
-    (O(accumulated store) per batch — right for backfills and bounded
-    stores). "log" appends each micro-batch as an immutable delta and
-    compacts every ``compact_every`` batches (store.merge_into_log) —
-    O(batch) per micro-batch, the long-running-stream mode; read the
-    current state with store.load_log. Identical final semantics
-    (test_streaming_ingest pins full == log on the same fixture).
+    Each micro-batch is appended to the store as an immutable delta
+    (store.merge_into_log, O(batch)) and the log is compacted every
+    ``compact_every`` batches; store.load / store.load_log read the
+    current state with pending deltas folded in. ``compact_every=1``
+    rewrites the full version after every batch. A new checkpoint numbers
+    its batches after every batch the store already holds, so a second
+    stream into the same store is never skipped as a replay.
+    ``merge_mode`` is kept for callers of the former two-mode signature;
+    "log" is its only value.
 
     ARRIVAL ORDER: the file source processes files in mtime order, and
     batch order is what $set merge resolution follows — two reports
@@ -56,12 +80,15 @@ def stream_import(
     appear). Backfills should be staged with
     streaming.staging.stamp_monotone_mtimes / stage_time_sorted.
     """
-    if merge_mode not in ("full", "log"):
-        raise ValueError(f"unknown merge_mode {merge_mode!r}; use 'full' or 'log'")
+    if merge_mode != "log":
+        raise ValueError(
+            f"unknown merge_mode {merge_mode!r}; the store has one write path, 'log'"
+        )
     from pymongraph_spark.streaming.staging import mtime_tie_monitor
 
     check_ties = mtime_tie_monitor(input_dir, context="stream_import")
     check_ties()  # start-of-stream sweep (covers everything already staged)
+    offset = _batch_offset(checkpoint_dir, store_path)
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -75,12 +102,9 @@ def stream_import(
         if reports.isEmpty():
             return
         g = build_graph_tables(staging_frame(spark, reports))
-        if merge_mode == "log":
-            store.merge_into_log(
-                spark, store_path, g, batch_id, compact_every=compact_every
-            )
-        else:
-            store.merge_into(spark, store_path, g)
+        store.merge_into_log(
+            spark, store_path, g, offset + batch_id, compact_every=compact_every
+        )
 
     writer = (
         lines.writeStream.foreachBatch(process_batch)

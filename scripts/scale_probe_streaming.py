@@ -25,12 +25,14 @@ Five measurements:
    so rows/s vs B quantifies the per-batch fixed cost a provisioner must
    amortize (the r7 bench's 332 rows/s at one 1k batch is this curve's
    low end). Also records a 1-batch 10× run (8k reports in one batch)
-   for the fixture-size scaling point. Both merge modes.
+   for the fixture-size scaling point. Both compaction cadences: "full"
+   compacts after every batch (compact_every=1), "log" every 16.
 
 4. **standing-store sensitivity**: marginal per-batch ingest cost vs the
-   size of the accumulated store (2k/16k/128k reports), full vs log
-   merge mode — the structural O(store)-rewrite vs O(batch)-append
-   difference merge_into_log exists for.
+   size of the accumulated store (2k/16k/128k reports), compacting after
+   every batch ("full") vs never during the probe ("log") — the
+   structural O(store)-rewrite vs O(batch)-append difference
+   merge_into_log exists for.
 
 5. **streaming registry sweep**: every non-st88 st query end-to-end at
    both scales, so the whole streaming tier carries two-scale numbers.
@@ -169,7 +171,7 @@ def probe_stream_import(spark, out: dict) -> None:
 
     total_rows = 8000
     curves: dict[str, list] = {}
-    for mode in ("full", "log"):
+    for mode, every in (("full", 1), ("log", 16)):
         curve = []
         for batch_rows in (250, 1000, 2000, 8000):
             base = tempfile.mkdtemp(prefix="sparkgraph_ingest_curve_")
@@ -191,7 +193,7 @@ def probe_stream_import(spark, out: dict) -> None:
                     os.path.join(base, "ckpt"),
                     available_now=True,
                     max_files_per_trigger=1,
-                    merge_mode=mode,
+                    compact_every=every,
                 )
                 q.awaitTermination()
                 total_s = round(time.perf_counter() - t0, 3)
@@ -215,15 +217,15 @@ def probe_stream_import(spark, out: dict) -> None:
 
 def probe_ingest_store_sensitivity(spark, out: dict) -> None:
     """(4): per-batch ingest cost vs STANDING STORE size — the structural
-    difference between the merge modes. Build stores of 2k and 16k
-    reports, then append four 250-row batches to each and report the
-    marginal per-batch cost. Full mode re-reads and rewrites the whole
-    store per batch (cost grows with the store); log mode appends
-    O(batch) deltas (flat until the amortized compaction)."""
+    difference between the compaction cadences. Build stores of 2k and
+    16k reports, then append four 250-row batches to each and report the
+    marginal per-batch cost. Compacting every batch re-reads and rewrites
+    the whole store per batch (cost grows with the store); without
+    compaction each batch appends an O(batch) delta."""
     from pymongraph_spark.ingest.streaming import stream_import
 
     result: dict[str, dict] = {}
-    for mode in ("full", "log"):
+    for mode, every in (("full", 1), ("log", 1_000_000)):
         per_store = {}
         for store_rows in (2000, 16000, 128000):
             base = tempfile.mkdtemp(prefix="sparkgraph_ingest_standing_")
@@ -237,8 +239,7 @@ def probe_ingest_store_sensitivity(spark, out: dict) -> None:
                         fh.write(_report_line(j) + "\n")
                 stream_import(
                     spark, inp, store_path, os.path.join(base, "ckpt"),
-                    available_now=True, merge_mode=mode,
-                    compact_every=1_000_000,  # never compact mid-probe
+                    available_now=True, compact_every=every,
                 ).awaitTermination()
                 # append 4 fixed 250-row batches; time the marginal drain
                 for f_idx in range(4):
@@ -251,7 +252,7 @@ def probe_ingest_store_sensitivity(spark, out: dict) -> None:
                 stream_import(
                     spark, inp, store_path, os.path.join(base, "ckpt"),
                     available_now=True, max_files_per_trigger=1,
-                    merge_mode=mode, compact_every=1_000_000,
+                    compact_every=every,
                 ).awaitTermination()
                 per_store[f"store_{store_rows}"] = round(
                     (time.perf_counter() - t0) / 4, 3

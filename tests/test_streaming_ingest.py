@@ -102,28 +102,9 @@ def test_store_time_travel_and_retention(spark, tmp_path, monkeypatch):
     assert store.load(spark, path).vertices.count() == 9
 
 
-def test_lakehouse_probe_and_merge_routing(spark, tmp_path):
-    """The Delta probe must return a stable, honest answer either way, and
-    merge_into must work through whichever path the probe selects (MERGE
-    INTO when delta is installed, parquet version-swap otherwise)."""
-    fmt = store.lakehouse_format(spark)
-    assert fmt in (None, "delta")
-    assert store.lakehouse_format(spark) == fmt  # memoized, not re-probed
-
-    st = str(tmp_path / "store")
-    g1 = import_from_json(spark, [REPORT_1])
-    merged = store.merge_into(spark, st, g1)
-    v1 = merged.vertices.count()
-    # replay is idempotent through either storage backend
-    merged2 = store.merge_into(spark, st, g1)
-    assert merged2.vertices.count() == v1
-    assert merged2.edges.count() == merged.edges.count()
-
-
 def test_merge_into_output_readable_via_store_load(spark, tmp_path):
-    """ADVICE r4: whichever backend merge_into routes through, the result
-    must be readable back through store.load / store.versions — a
-    streamed merge must never become invisible to the store readers."""
+    """merge_into's result is what store.load / store.versions read back,
+    and replaying the same batch changes nothing."""
     st = str(tmp_path / "store_roundtrip")
     g1 = import_from_json(spark, [REPORT_1])
     merged = store.merge_into(spark, st, g1)
@@ -132,60 +113,11 @@ def test_merge_into_output_readable_via_store_load(spark, tmp_path):
     assert loaded.vertices.count() == merged.vertices.count()
     assert loaded.edges.count() == merged.edges.count()
     assert len(store.versions(st)) >= 1
-
-
-def test_merge_into_auto_is_layout_sticky(spark, tmp_path):
-    """A store created as parquet stays parquet under backend='auto' even
-    if a delta runtime appears later — history must not go invisible."""
-    st = str(tmp_path / "store_sticky")
-    g1 = import_from_json(spark, [REPORT_1])
-    store.merge_into(spark, st, g1, backend="parquet")
-    # fake a session whose probe says delta: auto must still pick parquet
-    # because the existing layout wins before the runtime probe runs
-    memo = "_sparkgraph_lakehouse_format"
-    had = hasattr(spark, memo)
-    old = getattr(spark, memo, None)
-    try:
-        setattr(spark, memo, "delta")
-        merged = store.merge_into(spark, st, g1, backend="auto")
-    finally:
-        # restore absence with delattr: setattr(..., None) would leave
-        # the probed-already flag set and pin "no runtime" session-wide
-        if had:
-            setattr(spark, memo, old)
-        else:
-            delattr(spark, memo)
-    assert not store._delta_layout(st)
-    assert store.load(spark, st).vertices.count() == merged.vertices.count()
-
-
-def test_merge_into_delta_backend_roundtrip(spark, tmp_path):
-    """Delta-backend merge readable via the same store.load API. Skipped
-    where the runtime is absent (this container ships no delta jars)."""
-    import pytest
-
-    if store.lakehouse_format(spark) != "delta":
-        pytest.skip("delta runtime not installed")
-    st = str(tmp_path / "store_delta")
-    g1 = import_from_json(spark, [REPORT_1])
-    merged = store.merge_into(spark, st, g1, backend="delta")
-    loaded = store.load(spark, st)
-    assert loaded is not None
-    assert loaded.vertices.count() == merged.vertices.count()
-    assert len(store.versions(st)) >= 1
-
-
-def test_delta_versions_sort_numerically(tmp_path):
-    """Regression: commit ids must sort numerically — lexicographic
-    string order breaks at commit 10 ('10' < '2') and versions()[-1]
-    (the 'just written' idiom) would point at the wrong snapshot."""
-    log = tmp_path / "store" / "delta_vertices" / "_delta_log"
-    log.mkdir(parents=True)
-    for i in range(12):
-        (log / f"{i:020d}.json").write_text("{}")
-    got = store.versions(str(tmp_path / "store"))
-    assert got == [str(i) for i in range(12)]
-    assert got[-1] == "11"
+    # replay is idempotent
+    merged2 = store.merge_into(spark, st, g1)
+    assert merged2.vertices.count() == merged.vertices.count()
+    assert merged2.edges.count() == merged.edges.count()
+    assert _canon(merged2) == _canon(merged)
 
 
 def test_store_changes_cdc(spark, tmp_path):
@@ -519,24 +451,84 @@ def test_release_restores_successor_lease(spark, tmp_path):
     os.unlink(lease)
 
 
-def test_stream_import_log_mode_matches_full_mode(spark, tmp_path):
-    inp = tmp_path / "in"
-    _write_reports(inp, "batch1.jsonl", [REPORT_1])
-    _write_reports(inp, "batch2.jsonl", [REPORT_2])
-    _write_reports(inp, "batch3.jsonl", [REPORT_3])
+def test_stream_import_matches_batch_import_insert_origin(spark, tmp_path):
+    """One report per micro-batch ends in the same graph as one batch
+    import: a later batch $sets only its update-origin props, so
+    insert-origin props keep the first insert (REPORT_2 re-detects
+    h-bad-1 with datetime 2020-03-02; REPORT_1's 2020-02-01 stays).
+    compact_every=2 makes one compaction fold base + delta."""
+    from pymongraph_spark.streaming.staging import stamp_monotone_mtimes
 
-    full, ck1 = str(tmp_path / "sfull"), str(tmp_path / "ck1")
-    logd, ck2 = str(tmp_path / "slog"), str(tmp_path / "ck2")
+    inp = tmp_path / "in"
+    for i, r in enumerate(ALL_REPORTS):
+        _write_reports(inp, f"batch{i + 1}.jsonl", [r])
+    stamp_monotone_mtimes(str(inp))
+    st, ck = str(tmp_path / "store"), str(tmp_path / "ck")
     stream_import(
-        spark, str(inp), full, ck1, max_files_per_trigger=1
+        spark, str(inp), st, ck, max_files_per_trigger=1, compact_every=2
     ).awaitTermination()
-    stream_import(
-        spark, str(inp), logd, ck2, max_files_per_trigger=1, merge_mode="log",
-        compact_every=2,
-    ).awaitTermination()
-    g_full, g_log = store.load(spark, full), store.load_log(spark, logd)
-    assert _canon(g_log) == _canon(g_full)
-    assert g_log.vertices.count() == 9 and g_log.edges.count() == 11
+    g = store.load(spark, st)
+    det = {
+        (r["props"] or {}).get("hash"): dict(r["props"] or {})
+        for r in g.vertices.filter("label = 'malicious'").collect()
+    }
+    assert det["h-bad-1"]["datetime"] == "2020-02-01"
+    assert _canon(g) == _canon(import_from_json(spark, ALL_REPORTS))
+    assert store._compacted_through(st) >= 0  # a compaction ran
+    assert len(store._committed_deltas(st)) == 1  # and one delta is pending
+
+
+def test_stream_with_fresh_checkpoint_appends_after_compacted_batches(spark, tmp_path):
+    """A second stream with a new checkpoint numbers its batches from 0
+    again; they must land after the first stream's compacted batches,
+    not be skipped as replays."""
+    st = str(tmp_path / "store")
+    _write_reports(tmp_path / "in1", "a.jsonl", [REPORT_1])
+    _write_reports(tmp_path / "in2", "b.jsonl", [REPORT_2, REPORT_3])
+    for name in ("in1", "in2"):
+        stream_import(
+            spark, str(tmp_path / name), st, str(tmp_path / f"ck_{name}"),
+            compact_every=1,
+        ).awaitTermination()
+    assert store._committed_deltas(st) == []
+    assert _canon(store.load(spark, st)) == _canon(import_from_json(spark, ALL_REPORTS))
+
+
+def test_deltas_without_upd_column_fold_with_set_semantics(spark, tmp_path):
+    """Delta dirs written before deltas carried ``upd`` (vertices: id,
+    label, props only) keep folding as plain $set of their props, also
+    when a new-layout delta is pending in the same scan."""
+    import os
+
+    from pymongraph_spark.graph.model import VERTEX_FIELDS, PropertyGraph
+    from pymongraph_spark.ingest import build_graph_tables, staging_frame
+
+    def batch(report):
+        df = spark.createDataFrame([(0, json.dumps(report))], "ord bigint, value string")
+        return build_graph_tables(staging_frame(spark, df))
+
+    def plain(g):
+        return PropertyGraph(g.vertices.select(VERTEX_FIELDS), g.edges)
+
+    g1, g2, g3 = (batch(r) for r in ALL_REPORTS)
+    logd = str(tmp_path / "log")
+    for bid, g in enumerate((g1, g2)):
+        bdir = os.path.join(logd, "log", "b%012d" % bid)
+        g.vertices.select(VERTEX_FIELDS).write.parquet(os.path.join(bdir, "vertices"))
+        g.edges.write.parquet(os.path.join(bdir, "edges"))
+        with open(os.path.join(bdir, "_COMMITTED"), "w") as fh:
+            fh.write("ok")
+    store.merge_into_log(spark, logd, g3, batch_id=2, compact_every=100)
+    full = str(tmp_path / "full")
+    for g in (plain(g1), plain(g2), g3):
+        store.merge_into(spark, full, g)
+    got = store.load_log(spark, logd)
+    assert _canon(got) == _canon(store.load(spark, full))
+    det = {
+        (r["props"] or {}).get("hash"): dict(r["props"] or {})
+        for r in got.vertices.filter("label = 'malicious'").collect()
+    }
+    assert det["h-bad-1"]["datetime"] == "2020-03-02"  # legacy $set of props
 
 
 def test_mixed_mode_merge_compacts_pending_deltas(spark, tmp_path):
