@@ -102,6 +102,30 @@ def test_store_time_travel_and_retention(spark, tmp_path, monkeypatch):
     assert store.load(spark, path).vertices.count() == 9
 
 
+def test_lakehouse_probe_and_merge_routing(spark, tmp_path):
+    """There is no lakehouse probe left to route on: every store is
+    parquet version dirs, and merge_into goes through the one fold (the
+    current version at ordinal 0, the batch at 1). Replay is idempotent."""
+    import os
+
+    st = str(tmp_path / "store")
+    g1 = import_from_json(spark, [REPORT_1])
+    g2 = import_from_json(spark, [REPORT_2])
+    merged = store.merge_into(spark, st, g1)
+    v1 = merged.vertices.count()
+    assert not os.path.exists(os.path.join(st, "_delta_log"))
+    assert os.path.isdir(os.path.join(st, store._current_version(st)))
+
+    before = store.load(spark, st)
+    merged2 = store.merge_into(spark, st, g2)
+    assert _canon(merged2) == _canon(store.fold_graphs(before, g2))
+    # replay is idempotent
+    merged3 = store.merge_into(spark, st, g2)
+    assert _canon(merged3) == _canon(merged2)
+    assert merged3.vertices.count() >= v1
+    assert merged3.edges.count() == merged2.edges.count()
+
+
 def test_merge_into_output_readable_via_store_load(spark, tmp_path):
     """merge_into's result is what store.load / store.versions read back,
     and replaying the same batch changes nothing."""
