@@ -71,8 +71,8 @@ def _streaming_bench(spark, sf_dir: str) -> dict:
     'streaming' key so round-over-round regressions are measurable):
 
     - stream_import_rows_per_sec: JSON-report lines/s through the full
-      readStream → foreachBatch staging-transform → store-merge pipeline
-      (availableNow drain of a deterministic 1k-report fixture).
+      readStream → foreachBatch staging-transform → store log-append
+      pipeline (availableNow drain of a deterministic 1k-report fixture).
     - st88_sec_per_batch: wall seconds per micro-batch of the streaming
       near-dup index pipeline (4 maxFilesPerTrigger=1 waves over the
       sf documents table: probe batch vs standing index + index append).

@@ -9,9 +9,10 @@ no compaction has folded into a version yet.
 Every graph-store write merges through ONE rule, ``fold``: rows tagged
 with an ordinal are grouped per vertex (id, label) and per edge id; a
 vertex starts from the props of its lowest ordinal and ``$set``s each
-later ordinal's ``upd`` map in order (a batch built from reports carries
-only its update-origin props there, so a later batch never overwrites
-what the first insert wrote — mongraph.py:90-97); an edge keeps its
+later ordinal's ``upd`` map in order (a batch built from reports by
+``build_graph_tables`` carries only its update-origin props there, so it
+never overwrites what the first insert wrote — mongraph.py:90-97; a
+graph without ``upd`` is a plain ``$set`` of its props); an edge keeps its
 lowest-ordinal row (first writer wins). The compacted base version is
 ordinal 0, a delta is its batch id + 1. ``merge_into`` folds one batch
 onto the current version, the log mode (``merge_into_log`` /
@@ -472,6 +473,10 @@ def merge_into(spark: SparkSession, path: str, new: PropertyGraph) -> PropertyGr
     current version at ordinal 0, ``new`` at ordinal 1, through ``fold``
     (the log mode with a compaction after every batch). Replays are
     idempotent: a batch's ``upd`` is already part of what it wrote.
+    Only a batch that carries ``upd`` (a ``build_graph_tables`` graph)
+    keeps the insert-origin props of vertices the store already holds;
+    a graph without it, such as ``import_from_json``'s, merges as a
+    plain ``$set`` of all its props.
 
     Pending log deltas are compacted first (which advances the replay
     watermark and drains the log); folding them into this snapshot alone
@@ -709,13 +714,18 @@ def _committed_deltas(path: str) -> list[str]:
     )
 
 
-def next_batch_id(path: str) -> int:
-    """A batch id above every id the store's log has seen (pending,
-    torn, or folded into the base)."""
+def reserve_batch_id(path: str) -> int:
+    """Claim a batch id above every id the store's log has seen (pending,
+    torn, or folded into the base) for a writer whose own batch ids do
+    not follow the store's. The claimed delta dir is created empty (a
+    torn write until merge_into_log fills it), so no later claim can
+    take the same id, even if the batch is not appended yet."""
+    _acquire_log_lease(path)
     log = _log_dir(path)
-    names = os.listdir(log) if os.path.isdir(log) else []
-    seen = [int(d[1:]) for d in names if d.startswith("b") and d[1:].isdigit()]
-    return max([_compacted_through(path), *seen]) + 1
+    seen = [int(d[1:]) for d in os.listdir(log) if d.startswith("b") and d[1:].isdigit()]
+    bid = max([_compacted_through(path), *seen]) + 1
+    os.makedirs(os.path.join(log, f"b{bid:012d}"))
+    return bid
 
 
 def merge_into_log(

@@ -360,7 +360,10 @@ def import_from_json(spark: SparkSession, reports: list[dict] | DataFrame) -> Pr
     """E1 entry point (graph_importer.py:170-175): reports → PropertyGraph.
 
     Accepts a list of report dicts (tests) or a DataFrame[ord, value]
-    (``spark.read.text`` / streaming micro-batches).
+    (``spark.read.text`` / streaming micro-batches). The returned
+    vertices drop ``upd``, so a later ``store.merge_into`` of this graph
+    is a plain ``$set`` that overwrites insert-origin props; merge a
+    ``build_graph_tables`` graph to keep them.
     """
     if isinstance(reports, list):
         rows = [(i, json.dumps(r)) for i, r in enumerate(reports)]

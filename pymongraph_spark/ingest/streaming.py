@@ -5,8 +5,8 @@ Streaming, with ``foreachBatch`` appending each batch to the parquet graph
 store's log (store.merge_into_log).
 
 Exactly-once-effective: ids are pure functions of natural keys and a
-batch's delta is keyed by its batch id, so micro-batch replays after
-failure converge to the same graph.
+batch's delta is keyed by the store batch id its checkpoint recorded for
+it, so micro-batch replays after failure converge to the same graph.
 """
 
 from __future__ import annotations
@@ -21,22 +21,27 @@ from pymongraph_spark.graph import store
 from pymongraph_spark.ingest.importer import build_graph_tables, staging_frame
 
 
-def _batch_offset(checkpoint_dir: str, store_path: str) -> int:
-    """Store batch id of this checkpoint's micro-batch 0.
+def _store_batch_id(checkpoint_dir: str, store_path: str, batch_id: int) -> int:
+    """Store batch id of this checkpoint's micro-batch ``batch_id``.
 
-    A stream's batch ids restart at 0 with every new checkpoint, while
-    the store skips ids at or below its compaction watermark (that is
-    how a replayed batch stays exactly-once). So a checkpoint starts
-    after every id the store has seen, and keeps that offset so replays
-    of its batches map to the same store ids.
+    A stream's batch ids restart at 0 with every new checkpoint, and
+    several checkpoints may feed one store in turn, so each micro-batch
+    claims a fresh store id (store.reserve_batch_id) the first time it
+    runs and records it in the checkpoint. A replay of the batch reads
+    the same id back, which keeps its append exactly-once. Spark replays
+    only the latest batch, so the records of older ones are dropped.
     """
-    marker = os.path.join(checkpoint_dir, "sparkgraph_batch_offset")
-    if not os.path.exists(marker):
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(marker + ".tmp", "w") as fh:
-            fh.write(str(store.next_batch_id(store_path)))
-        os.replace(marker + ".tmp", marker)
-    with open(marker) as fh:
+    ids = os.path.join(checkpoint_dir, "sparkgraph_ids")
+    record = os.path.join(ids, str(batch_id))
+    if not os.path.exists(record):
+        os.makedirs(ids, exist_ok=True)
+        with open(record + ".tmp", "w") as fh:
+            fh.write(str(store.reserve_batch_id(store_path)))
+        os.replace(record + ".tmp", record)
+        for name in os.listdir(ids):
+            if name.isdigit() and int(name) < batch_id:
+                os.remove(os.path.join(ids, name))
+    with open(record) as fh:
         return int(fh.read())
 
 
@@ -63,9 +68,10 @@ def stream_import(
     (store.merge_into_log, O(batch)) and the log is compacted every
     ``compact_every`` batches; store.load / store.load_log read the
     current state with pending deltas folded in. ``compact_every=1``
-    rewrites the full version after every batch. A new checkpoint numbers
-    its batches after every batch the store already holds, so a second
-    stream into the same store is never skipped as a replay.
+    rewrites the full version after every batch. Each micro-batch takes
+    the next free store batch id and keeps it in the checkpoint for its
+    replays, so streams with different checkpoints can feed one store in
+    turn without one's batch being skipped as a replay of another's.
     ``merge_mode`` is kept for callers of the former two-mode signature;
     "log" is its only value.
 
@@ -88,7 +94,6 @@ def stream_import(
 
     check_ties = mtime_tie_monitor(input_dir, context="stream_import")
     check_ties()  # start-of-stream sweep (covers everything already staged)
-    offset = _batch_offset(checkpoint_dir, store_path)
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -103,7 +108,11 @@ def stream_import(
             return
         g = build_graph_tables(staging_frame(spark, reports))
         store.merge_into_log(
-            spark, store_path, g, offset + batch_id, compact_every=compact_every
+            spark,
+            store_path,
+            g,
+            _store_batch_id(checkpoint_dir, store_path, batch_id),
+            compact_every=compact_every,
         )
 
     writer = (

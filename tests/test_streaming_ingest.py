@@ -20,6 +20,16 @@ def _write_reports(dirpath, name, reports):
     (dirpath / name).write_text("\n".join(json.dumps(r) for r in reports) + "\n")
 
 
+def _report_batch(spark, report):
+    """One report as the batch graph a micro-batch appends: built by
+    build_graph_tables, so it carries ``upd`` and a merge of it keeps
+    insert-origin props (import_from_json's frames do not)."""
+    from pymongraph_spark.ingest import build_graph_tables, staging_frame
+
+    df = spark.createDataFrame([(0, json.dumps(report))], "ord bigint, value string")
+    return build_graph_tables(staging_frame(spark, df))
+
+
 def test_stream_matches_batch(spark, tmp_path):
     inp, st, ckpt = tmp_path / "in", str(tmp_path / "store"), str(tmp_path / "ckpt")
     _write_reports(inp, "batch1.jsonl", ALL_REPORTS)
@@ -103,22 +113,19 @@ def test_store_time_travel_and_retention(spark, tmp_path, monkeypatch):
 
 
 def test_lakehouse_probe_and_merge_routing(spark, tmp_path):
-    """There is no lakehouse probe left to route on: every store is
-    parquet version dirs, and merge_into goes through the one fold (the
-    current version at ordinal 0, the batch at 1). Replay is idempotent."""
+    """Every store is parquet version dirs, and merge_into of successive
+    batches ends where one batch import of the same reports does. Replay
+    is idempotent."""
     import os
 
     st = str(tmp_path / "store")
-    g1 = import_from_json(spark, [REPORT_1])
-    g2 = import_from_json(spark, [REPORT_2])
+    g1, g2 = _report_batch(spark, REPORT_1), _report_batch(spark, REPORT_2)
     merged = store.merge_into(spark, st, g1)
     v1 = merged.vertices.count()
-    assert not os.path.exists(os.path.join(st, "_delta_log"))
     assert os.path.isdir(os.path.join(st, store._current_version(st)))
 
-    before = store.load(spark, st)
     merged2 = store.merge_into(spark, st, g2)
-    assert _canon(merged2) == _canon(store.fold_graphs(before, g2))
+    assert _canon(merged2) == _canon(import_from_json(spark, [REPORT_1, REPORT_2]))
     # replay is idempotent
     merged3 = store.merge_into(spark, st, g2)
     assert _canon(merged3) == _canon(merged2)
@@ -502,20 +509,26 @@ def test_stream_import_matches_batch_import_insert_origin(spark, tmp_path):
     assert len(store._committed_deltas(st)) == 1  # and one delta is pending
 
 
-def test_stream_with_fresh_checkpoint_appends_after_compacted_batches(spark, tmp_path):
-    """A second stream with a new checkpoint numbers its batches from 0
-    again; they must land after the first stream's compacted batches,
-    not be skipped as replays."""
+def test_streams_with_separate_checkpoints_take_turns_on_one_store(spark, tmp_path):
+    """Batch ids restart at 0 with every checkpoint. Two checkpoints that
+    feed one store in turn, the first resumed after the second wrote,
+    must each append every batch (none skipped as a replay of the other's
+    batch) and end where one batch import of all reports does."""
+    from pymongraph_spark.ingest import streaming
+
     st = str(tmp_path / "store")
-    _write_reports(tmp_path / "in1", "a.jsonl", [REPORT_1])
-    _write_reports(tmp_path / "in2", "b.jsonl", [REPORT_2, REPORT_3])
-    for name in ("in1", "in2"):
-        stream_import(
-            spark, str(tmp_path / name), st, str(tmp_path / f"ck_{name}"),
-            compact_every=1,
-        ).awaitTermination()
+    in1, ck1 = tmp_path / "in1", str(tmp_path / "ck1")
+    _write_reports(in1, "a.jsonl", [REPORT_1])
+    _write_reports(tmp_path / "in2", "b.jsonl", [REPORT_2])
+    for inp, ck in ((in1, ck1), (tmp_path / "in2", str(tmp_path / "ck2"))):
+        stream_import(spark, str(inp), st, ck, compact_every=1).awaitTermination()
+    _write_reports(in1, "c.jsonl", [REPORT_3])
+    stream_import(spark, str(in1), st, ck1, compact_every=1).awaitTermination()
+    assert store._compacted_through(st) == 2
     assert store._committed_deltas(st) == []
     assert _canon(store.load(spark, st)) == _canon(import_from_json(spark, ALL_REPORTS))
+    # a replay of ck1's second batch reads back the store id it took
+    assert streaming._store_batch_id(ck1, st, 1) == 2
 
 
 def test_deltas_without_upd_column_fold_with_set_semantics(spark, tmp_path):
@@ -525,16 +538,11 @@ def test_deltas_without_upd_column_fold_with_set_semantics(spark, tmp_path):
     import os
 
     from pymongraph_spark.graph.model import VERTEX_FIELDS, PropertyGraph
-    from pymongraph_spark.ingest import build_graph_tables, staging_frame
-
-    def batch(report):
-        df = spark.createDataFrame([(0, json.dumps(report))], "ord bigint, value string")
-        return build_graph_tables(staging_frame(spark, df))
 
     def plain(g):
         return PropertyGraph(g.vertices.select(VERTEX_FIELDS), g.edges)
 
-    g1, g2, g3 = (batch(r) for r in ALL_REPORTS)
+    g1, g2, g3 = (_report_batch(spark, r) for r in ALL_REPORTS)
     logd = str(tmp_path / "log")
     for bid, g in enumerate((g1, g2)):
         bdir = os.path.join(logd, "log", "b%012d" % bid)
