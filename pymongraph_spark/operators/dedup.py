@@ -3,15 +3,27 @@
 Five tiers, all shuffle-frugal by construction:
 
 - exact_dedup           — hash-groupBy on a normalized content hash.
-- token_jaccard_pairs   — exact Jaccard over shingle sets, blocked so the
-                          self-join never goes O(n²) globally.
+- token_jaccard_pairs   — exact Jaccard over shingle sets, candidates from
+                          a prefix-filtered join (_prefix_meetings, shared
+                          with containment_pairs).
 - minhash_lsh_pairs     — MinHash signatures + banded LSH bucketing; only
                           same-bucket candidates are verified. The scale
                           path for 100 TB fuzzy dedup: cost is
                           O(n·bands + candidate pairs), never n².
-- simhash_pairs         — 64-bit SimHash + Hamming-ball banding.
+- simhash_pairs         — SimHash + Hamming-ball chunk banding.
 - embedding_dup_pairs   — cosine near-dup over embedding columns (see
                           similarity.py for the ANN machinery).
+
+Every shingle-set pair operator is one signature or candidate step
+feeding the same two helpers: _band_candidates (the (band, key)
+equi-join that turns banded frames into distinct id pairs — self-join,
+batch-vs-index probe and the sketch report alike) and _verified_jaccard
+(exact shingle Jaccard over candidates only; _jaccard is its one
+expression). The two MinHash hash families — murmur3 (fast,
+minhash_lsh_pairs) and md5 + affine (SQL-replayable, the *_neutral and
+index operators) — differ only in the signature and band-key step.
+SimHash likewise has one fingerprint fold (_simhash) and one chunk join
+(_simhash_pairs), parameterized by token hash and bit width.
 
 Everything below is pure Column expressions — signatures, banding, and
 verification all stay JVM-side; there is no Python in the per-row path.
@@ -209,46 +221,34 @@ def shingled_grams(
     )
 
 
-def token_jaccard_pairs(
+def _prefix_meetings(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    block_cols: tuple[str, ...] = ("lang",),
-) -> DataFrame:
-    """Exact word-n-gram Jaccard similarity pairs above ``threshold`` via
-    a PREFIX-FILTERED set-similarity join (the PPJoin/AllPairs family —
-    Bayardo et al. WWW'07, Chaudhuri et al. ICDE'06).
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    block_cols: tuple[str, ...],
+    full_b: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """The prefix-filter stage shared by token_jaccard_pairs and
+    containment_pairs. Returns ``(s, meetings)``:
+
+    - ``s``: the PERSISTED (doc_id, *block_cols, shingles) frame. The
+      interpreted tokenize+shingle HOF is the dominant cost and EVERY
+      downstream consumer (df counts, rank window, candidate sides,
+      verification) would otherwise re-evaluate it from the scan
+      (measured 16.7s -> ~6s at sf0.1). The caller releases it after
+      its eager result checkpoint.
+    - ``meetings``: one row per shingle two docs share on the candidate
+      equi-join (shingle, blocks), with doc_id_a/b, the set sizes
+      __sz_a/b, the df ranks __rk_a/b of the shared shingle, and __ub =
+      min(|A|-rkA, |B|-rkB) + 1, the overlap bound from the min-rank
+      common element (PPJoin positional filter).
 
     Shingles are globally ordered by ascending document frequency
-    (rarest first; ties by shingle). Each doc exposes only its first
-    |S| − ceil(t·|S|) + 1 shingles under that order (computed in that
-    ceil form: the algebraically-equal floor((1−t)·|S|)+1 under-counts
-    in doubles because 1−0.8 = 0.19999…96); candidate pairs are
-    those sharing ≥1 prefix shingle within the same ``block_cols`` —
-    a plain equi-join on (shingle, blocks). LOSSLESS: for the min-rank
-    common element e of A∩B, if e were outside A's prefix then
-    |A∩B| ≤ ceil(t·|A|) − 1 < t·|A| ≤ t·|A∪B|, contradicting J ≥ t —
-    so e is in BOTH prefixes and every qualifying pair meets. The
-    frequency ordering puts RARE shingles in prefixes, so join buckets
-    stay small even on a homogeneous-length corpus where size-band
-    blocking degenerates to O(block²) (measured 1.0M band candidates vs
-    ~2k prefix candidates on 5k docs at sf0.1).
-
-    Jaccard = |∩| / (|A|+|B|-|∩|) over DISTINCT shingle sets — integer
-    sizes, double division (exact parity with the SQL oracle).
-
-    100 TB shape: one partial-agg for document frequencies, one
-    equi-join to rank, one per-doc window over prefix-length rows, the
-    candidate equi-join on uniform rare-shingle keys, and verification
-    over candidates only. Nothing is ever corpus × corpus.
-    """
-    # PERSIST the shingled frame: the interpreted tokenize+shingle HOF is
-    # the dominant cost and EVERY downstream consumer (df counts, rank
-    # window, candidate sides, verification) would otherwise re-evaluate
-    # it from the scan (measured 16.7s -> ~6s at sf0.1). Scoped lifecycle:
-    # result materialized eagerly, cache released in the finally.
+    (rarest first; ties by shingle) and side A exposes each doc's prefix:
+    its first |S| − ceil(t·|S|) + 1 shingles under that order. Side B
+    exposes the same prefix, or every shingle when ``full_b``."""
     s = (
         _spread(docs.filter(token_count(text_col) >= n))
         .select(
@@ -270,38 +270,78 @@ def token_jaccard_pairs(
     from pyspark.sql import Window
 
     rank_w = Window.partitionBy("doc_id").orderBy("__df", "__sh")
+    ranked = ex.join(freq, on="__sh").withColumn("__rk", F.row_number().over(rank_w))
     # exact bound is sz - ceil(t·sz) + 1 ≡ floor((1-t)·sz) + 1 only in
     # REAL arithmetic: in doubles 1-0.8 = 0.19999…96, so floor((1-t)·sz)
     # under-counts by one whenever (1-t)·sz lands just below an integer
     # (every sz divisible by 5 at t=0.8) and a qualifying pair whose only
     # common shingles sit at that last prefix position is silently
     # dropped. Compute the ceil form with a slack that keeps FP from
-    # rounding ABOVE the exact integer (same guard as alpha below).
+    # rounding ABOVE the exact integer.
     prefix_len = (
         F.col("__sz")
         - F.ceil(F.lit(threshold) * F.col("__sz").cast("double") - F.lit(1e-9)).cast("int")
         + 1
     )
-    prefix = (
-        ex.join(freq, on="__sh")
-        .withColumn("__rk", F.row_number().over(rank_w))
-        .filter(F.col("__rk") <= prefix_len)
-        .select("doc_id", *block_cols, "__sh", "__sz", "__rk")
+    prefix = ranked.filter(F.col("__rk") <= prefix_len)
+
+    def side(df: DataFrame, t: str) -> DataFrame:
+        return df.select(
+            F.col("doc_id").alias(f"doc_id_{t}"), "__sh",
+            F.col("__sz").alias(f"__sz_{t}"), F.col("__rk").alias(f"__rk_{t}"),
+            *[F.col(c).alias(f"__b_{c}") for c in block_cols],
+        )
+
+    meetings = side(prefix, "a").join(
+        side(ranked if full_b else prefix, "b"),
+        on=["__sh", *[f"__b_{c}" for c in block_cols]],
     )
-    pa = prefix.select(
-        F.col("doc_id").alias("doc_id_a"), "__sh",
-        F.col("__sz").alias("__sz_a"), F.col("__rk").alias("__rk_a"),
-        *[F.col(c).alias(f"__b_{c}") for c in block_cols],
+    ubound = F.lit(1) + F.least(
+        F.col("__sz_a") - F.col("__rk_a"), F.col("__sz_b") - F.col("__rk_b")
     )
-    pb = prefix.select(
-        F.col("doc_id").alias("doc_id_b"), "__sh",
-        F.col("__sz").alias("__sz_b"), F.col("__rk").alias("__rk_b"),
-        *[F.col(c).alias(f"__b_{c}") for c in block_cols],
+    return s, meetings.withColumn("__ub", ubound)
+
+
+def token_jaccard_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.8,
+    block_cols: tuple[str, ...] = ("lang",),
+) -> DataFrame:
+    """Exact word-n-gram Jaccard similarity pairs above ``threshold`` via
+    a PREFIX-FILTERED set-similarity join (the PPJoin/AllPairs family —
+    Bayardo et al. WWW'07, Chaudhuri et al. ICDE'06).
+
+    Each doc exposes only its first |S| − ceil(t·|S|) + 1 shingles in
+    ascending document-frequency order (computed in that ceil form: the
+    algebraically-equal floor((1−t)·|S|)+1 under-counts in doubles
+    because 1−0.8 = 0.19999…96); candidate pairs are those sharing ≥1
+    prefix shingle within the same ``block_cols`` — a plain equi-join on
+    (shingle, blocks), see _prefix_meetings. LOSSLESS: for the min-rank
+    common element e of A∩B, if e were outside A's prefix then
+    |A∩B| ≤ ceil(t·|A|) − 1 < t·|A| ≤ t·|A∪B|, contradicting J ≥ t —
+    so e is in BOTH prefixes and every qualifying pair meets. The
+    frequency ordering puts RARE shingles in prefixes, so join buckets
+    stay small even on a homogeneous-length corpus where size-band
+    blocking degenerates to O(block²) (measured 1.0M band candidates vs
+    ~2k prefix candidates on 5k docs at sf0.1).
+
+    Jaccard = |∩| / (|A|+|B|-|∩|) over DISTINCT shingle sets — integer
+    sizes, double division (exact parity with the SQL oracle).
+
+    100 TB shape: one partial-agg for document frequencies, one
+    equi-join to rank, one per-doc window over prefix-length rows, the
+    candidate equi-join on uniform rare-shingle keys, and verification
+    over candidates only. Nothing is ever corpus × corpus.
+    """
+    s, meetings = _prefix_meetings(
+        docs, text_col, id_col, n, threshold, block_cols, full_b=False
     )
     # PPJoin pruning at meeting time, before the distinct:
     # - size ratio: J ≥ t forces min/max set size ≥ t.
-    # - positional: the min-rank common element bounds the overlap by
-    #   min(|A|-rkA, |B|-rkB) + 1, which must reach the equivalent
+    # - positional: the overlap bound __ub must reach the equivalent
     #   overlap alpha = ceil(t/(1+t)·(|A|+|B|)). Each meeting is
     #   filtered independently; a qualifying pair's min-rank meeting
     #   always passes, so the distinct keeps it (lossless). The 1e-9
@@ -313,35 +353,19 @@ def token_jaccard_pairs(
         * (F.col("__sz_a") + F.col("__sz_b")).cast("double")
         - F.lit(1e-9)
     )
-    ubound = F.lit(1) + F.least(
-        F.col("__sz_a") - F.col("__rk_a"), F.col("__sz_b") - F.col("__rk_b")
-    )
     size_ok = (
         F.least("__sz_a", "__sz_b").cast("double") / F.greatest("__sz_a", "__sz_b")
         >= F.lit(threshold)
     )
     candidates = (
-        pa.join(pb, on=["__sh", *[f"__b_{c}" for c in block_cols]])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .filter(size_ok & (ubound >= alpha))
+        meetings.filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        .filter(size_ok & (F.col("__ub") >= alpha))
         .select("doc_id_a", "doc_id_b")
         .distinct()
     )
-    sh = s.select("doc_id", "shingles")
-    verified = candidates.join(
-        sh.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("shingles", "sh_a"),
-        on="doc_id_a",
-    ).join(
-        sh.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed("shingles", "sh_b"),
-        on="doc_id_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
     try:
-        return (
-            verified.select("doc_id_a", "doc_id_b", (inter / union).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-            .localCheckpoint(eager=True)
+        return _verified_jaccard(candidates, s, s, threshold).localCheckpoint(
+            eager=True
         )
     finally:
         s.unpersist()
@@ -375,73 +399,23 @@ def containment_pairs(
     (array_intersect over candidates only) is exact; nothing is ever
     corpus × corpus.
     """
-    # same persist rationale as token_jaccard_pairs above: one HOF pass,
-    # many consumers; scoped release after the eager result checkpoint
-    s = (
-        _spread(docs.filter(token_count(text_col) >= n))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            *[F.col(c) for c in block_cols],
-            tokens(text_col).alias("__toks"),
-        )
-        .select(
-            "doc_id",
-            *block_cols,
-            word_shingles(F.col("__toks"), n).alias("shingles"),
-        )
-    ).persist()
-    ex = s.select(
-        "doc_id", *block_cols, F.size("shingles").alias("__sz"),
-        F.explode("shingles").alias("__sh"),
-    )
-    freq = ex.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
-    from pyspark.sql import Window
-
-    rank_w = Window.partitionBy("doc_id").orderBy("__df", "__sh")
-    ranked = ex.join(freq, on="__sh").withColumn("__rk", F.row_number().over(rank_w))
-    prefix_len = (
-        F.col("__sz")
-        - F.ceil(F.lit(threshold) * F.col("__sz").cast("double") - F.lit(1e-9)).cast("int")
-        + 1
-    )
-    pa = (
-        ranked.filter(F.col("__rk") <= prefix_len)
-        .select(
-            F.col("doc_id").alias("doc_id_a"), "__sh",
-            F.col("__sz").alias("__sz_a"), F.col("__rk").alias("__rk_a"),
-            *[F.col(c).alias(f"__b_{c}") for c in block_cols],
-        )
-    )
-    pb = ranked.select(
-        F.col("doc_id").alias("doc_id_b"), "__sh",
-        F.col("__sz").alias("__sz_b"), F.col("__rk").alias("__rk_b"),
-        *[F.col(c).alias(f"__b_{c}") for c in block_cols],
+    s, meetings = _prefix_meetings(
+        docs, text_col, id_col, n, threshold, block_cols, full_b=True
     )
     need = F.ceil(F.lit(threshold) * F.col("__sz_a").cast("double") - F.lit(1e-9))
-    ubound = F.lit(1) + F.least(
-        F.col("__sz_a") - F.col("__rk_a"), F.col("__sz_b") - F.col("__rk_b")
-    )
     direction_ok = (F.col("__sz_a") < F.col("__sz_b")) | (
         (F.col("__sz_a") == F.col("__sz_b")) & (F.col("doc_id_a") < F.col("doc_id_b"))
     )
     candidates = (
-        pa.join(pb, on=["__sh", *[f"__b_{c}" for c in block_cols]])
-        .filter(direction_ok & (ubound >= need))
+        meetings.filter(direction_ok & (F.col("__ub") >= need))
         .select("doc_id_a", "doc_id_b")
         .distinct()
-    )
-    sh = s.select("doc_id", "shingles")
-    verified = candidates.join(
-        sh.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("shingles", "sh_a"),
-        on="doc_id_a",
-    ).join(
-        sh.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed("shingles", "sh_b"),
-        on="doc_id_b",
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     try:
         return (
-            verified.select(
+            _pair_shingles(candidates, s, s)
+            .select(
                 F.col("doc_id_a").alias("contained_id"),
                 F.col("doc_id_b").alias("container_id"),
                 inter.cast("bigint").alias("n_shared"),
@@ -460,10 +434,10 @@ def minhash_signatures(
     """MinHash signature per doc: sig[i] = min over shingles of
     murmur3(shingle, seed=i). One nested transform — no UDF, no shuffle.
 
-    Kept for consumers that need the map-only array form; the hot pipeline
-    paths use _signature_agg (explode → codegen'd min aggregates) instead:
-    higher-order functions are interpreted per element, so this form pays
-    num_hashes interpreted lambda evaluations per shingle (guide §1.2)."""
+    The signature step of minhash_lsh_pairs. Higher-order functions are
+    interpreted per element, so this form pays num_hashes interpreted
+    lambda evaluations per shingle (guide §1.2); minhash_lsh_pairs says
+    why murmur3 still keeps it."""
     seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     sig = F.transform(
         seeds,
@@ -511,30 +485,84 @@ def _signature_agg(
     )
 
 
-def _verified_jaccard(
-    candidates: DataFrame, sh: DataFrame, threshold: float
+def _jaccard(a: str, b: str) -> "F.Column":
+    """|A∩B| / (|A|+|B|-|A∩B|) over two DISTINCT shingle-array columns —
+    integer sizes, double division (exact parity with the SQL oracles)."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    return inter / ((F.size(a) + F.size(b)).cast("double") - inter)
+
+
+def _pair_shingles(
+    candidates: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    id_a: str = "doc_id_a",
+    id_b: str = "doc_id_b",
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs against the stored
-    (doc_id, shingles) frame. Join strategy is left to the planner: the
-    shingle frame is an eager localCheckpoint, and Spark 4 PROPAGATES the
-    pre-checkpoint statistics through it, so auto-broadcast already picks
-    BroadcastHashJoin whenever the corpus fits (verified in
-    plans/r15/t107_minhash_verify_before.txt — all-BHJ before any forced
-    hint existed). An r15 forced-broadcast variant that counted the
-    frame first was measured and REVERTED: the count() job cost more at
-    bench scale (d42 1.05→1.18 s) than the hint it guarded ever saved."""
-    sh_a = sh.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed(
-        "shingles", "sh_a"
+    """Attach each candidate side's shingle set: (id_a, id_b) pairs
+    joined to two (doc_id, shingles) frames, as columns sh_a / sh_b."""
+    return candidates.join(
+        sh_a.select(F.col("doc_id").alias(id_a), F.col("shingles").alias("sh_a")),
+        on=id_a,
+    ).join(
+        sh_b.select(F.col("doc_id").alias(id_b), F.col("shingles").alias("sh_b")),
+        on=id_b,
     )
-    sh_b = sh.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed(
-        "shingles", "sh_b"
+
+
+def _verified_jaccard(
+    candidates: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+    id_a: str = "doc_id_a",
+    id_b: str = "doc_id_b",
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate (id_a, id_b) pairs against
+    the two sides' stored (doc_id, shingles) frames — the same frame twice
+    for a self-join. Returns (id_a, id_b, jaccard ≥ threshold).
+
+    Join strategy is left to the planner: the shingle frames are eager
+    localCheckpoints (or persisted / parquet frames), and Spark 4
+    PROPAGATES the pre-checkpoint statistics through a checkpoint, so
+    auto-broadcast already picks BroadcastHashJoin whenever the corpus
+    fits (verified in plans/r15/t107_minhash_verify_before.txt — all-BHJ
+    before any forced hint existed). An r15 forced-broadcast variant that
+    counted the frame first was measured and REVERTED: the count() job
+    cost more at bench scale (d42 1.05→1.18 s) than the hint it guarded
+    ever saved."""
+    return (
+        _pair_shingles(candidates, sh_a, sh_b, id_a, id_b)
+        .select(id_a, id_b, _jaccard("sh_a", "sh_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
-    verified = candidates.join(sh_a, on="doc_id_a").join(sh_b, on="doc_id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return verified.select(
-        "doc_id_a", "doc_id_b", (inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+
+
+def _band_candidates(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    id_a: str = "doc_id_a",
+    id_b: str = "doc_id_b",
+) -> DataFrame:
+    """LSH candidate generation: distinct (id_a, id_b) doc pairs that share
+    a bucket, i.e. one equi-join of two (doc_id, band, key) frames on
+    (band, key). Shuffle keys are uniform hashes, so no skew. With no
+    ``right`` frame it is the SELF-join of ``left``, keeping id_a < id_b.
+
+    The self-join stays a join: an r15 A/B of the groupBy+in-bucket-
+    expansion shape measured it 0.4s SLOWER at sf0.1 (1.25 -> 1.67 s) —
+    AQE's exchange reuse already deduplicates the two identical banded
+    shuffles, so the "one shuffle saved" was not real and the
+    interpreted per-bucket expansion was pure cost."""
+    pairs = left.select("band", "key", F.col("doc_id").alias(id_a)).join(
+        (left if right is None else right).select(
+            "band", "key", F.col("doc_id").alias(id_b)
+        ),
+        on=["band", "key"],
+    )
+    if right is None:
+        pairs = pairs.filter(F.col(id_a) < F.col(id_b))
+    return pairs.select(id_a, id_b).distinct()
 
 
 def minhash_lsh_pairs(
@@ -568,7 +596,6 @@ def minhash_lsh_pairs(
     the caller drops the frame (cleanCheckpoints is on in session
     defaults), so nothing stays pinned after the call.
     """
-    rows = num_hashes // bands
     # weight=64: the 64-permutation interpreted fold downstream makes this
     # the heaviest per-byte consumer — gating its spread off at 594 KB
     # measured 1.05 -> 4.0 s single-core (see _spread)
@@ -587,39 +614,12 @@ def minhash_lsh_pairs(
     # expensive md5 family (see _neutral_banded).
     sig = minhash_signatures(s, num_hashes).localCheckpoint(eager=True)
     try:
-        band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-        banded = sig.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    band_idx,
-                    lambda bi: F.struct(
-                        bi.cast("int").alias("band"),
-                        F.xxhash64(F.slice("signature", bi * rows + 1, rows).cast("string")).alias("bucket"),
-                    ),
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.bucket")
-
-        # Candidates stay the banded SELF-JOIN: an r15 A/B of the
-        # groupBy+in-bucket-expansion shape measured it 0.4s SLOWER at
-        # sf0.1 (1.25 -> 1.67 s) — AQE's exchange reuse already
-        # deduplicates the two identical banded shuffles, so the "one
-        # shuffle saved" was not real and the interpreted per-bucket
-        # expansion was pure cost. Verification is bounded-broadcast
-        # (_verified_jaccard, measured 1.25 -> 1.12 s same session).
-        left = banded.select("band", "bucket", F.col("doc_id").alias("doc_id_a"))
-        right = banded.select("band", "bucket", F.col("doc_id").alias("doc_id_b"))
-        candidates = (
-            left.join(right, on=["band", "bucket"])
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .select("doc_id_a", "doc_id_b")
-            .distinct()
+        banded = _band_key_explode(
+            sig, num_hashes, bands, lambda sl: F.xxhash64(sl.cast("string"))
         )
-        sh = sig.select("doc_id", "shingles")
-        return _verified_jaccard(candidates, sh, threshold).localCheckpoint(
-            eager=True
-        )
+        return _verified_jaccard(
+            _band_candidates(banded), sig, sig, threshold
+        ).localCheckpoint(eager=True)
     finally:
         sig.unpersist()
 
@@ -653,11 +653,11 @@ def _neutral_banded(
     n: int,
     num_hashes: int,
     bands: int,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared engine-neutral signature + banding stage: returns
     (MATERIALIZED shingle frame (doc_id, shingles) — verification probes
-    the stored blocks — and the exploded banded frame (doc_id, band, key),
-    which reads a separately checkpointed (doc_id, signature) frame).
+    the stored blocks —, the separately checkpointed (doc_id, signature)
+    frame, and the exploded banded frame (doc_id, band, key) over it).
 
     Both checkpoints are eager barriers: without them the banded frame's
     key expressions would recompute the signature via projection
@@ -666,7 +666,6 @@ def _neutral_banded(
     per consumer (see minhash_lsh_pairs). Blocks are freed by the
     ContextCleaner when the caller drops the frames."""
     assert num_hashes <= len(MINHASH_AB), "extend MINHASH_AB for more permutations"
-    rows = num_hashes // bands
     # weight=64: the md5 fold + 64 min-aggregates downstream inherit this
     # frame's partitioning through the localCheckpoint (see _spread)
     s = shingled(docs, text_col, id_col, n, spread_weight=64)
@@ -687,7 +686,7 @@ def _neutral_banded(
     # InferFiltersFromGenerate pushdown (see _signature_agg's contract)
     grams = sigd.select("doc_id", F.explode("shingles").alias("gram"))
     sig_small = _neutral_signature(grams, num_hashes).localCheckpoint(eager=True)
-    return sigd, _band_key_explode(sig_small, num_hashes, bands)
+    return sigd, sig_small, _band_key_explode(sig_small, num_hashes, bands)
 
 
 def _neutral_signature(grams: DataFrame, num_hashes: int) -> DataFrame:
@@ -704,11 +703,20 @@ def _neutral_signature(grams: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def _band_key_explode(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc_id, band, key) from a (doc_id, signature) frame. Safe to
-    apply lazily to _neutral_signature output: the signature sits above
-    an Aggregate, so projection collapse cannot re-inline its
-    construction into the per-band key expressions."""
+def _band_key_explode(
+    sig: DataFrame,
+    num_hashes: int,
+    bands: int,
+    band_key=lambda sl: F.concat_ws(",", sl),
+) -> DataFrame:
+    """(doc_id, band, key) from a (doc_id, signature) frame, one row per
+    band; ``band_key(slice_col)`` turns the band's signature slice into
+    its bucket key. The default comma-joined slice is the SQL-replayable
+    key of the neutral family; minhash_lsh_pairs hashes the slice with
+    xxhash64. Safe to apply lazily to _neutral_signature output (the
+    signature sits above an Aggregate) or to a checkpoint: projection
+    collapse cannot re-inline the signature construction into the
+    per-band key expressions."""
     rows = num_hashes // bands
     band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
     return sig.select(
@@ -718,7 +726,7 @@ def _band_key_explode(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
                 band_idx,
                 lambda bi: F.struct(
                     bi.cast("int").alias("band"),
-                    F.concat_ws(",", F.slice("signature", bi * rows + 1, rows)).alias("key"),
+                    band_key(F.slice("signature", bi * rows + 1, rows)).alias("key"),
                 ),
             )
         ).alias("bb"),
@@ -741,24 +749,11 @@ def minhash_lsh_pairs_neutral(
     one cached signature pass released as soon as candidates materialize,
     an equi-join on (band, key), verification join over shingles.
     """
-    sigd, banded = _neutral_banded(docs, text_col, id_col, n, num_hashes, bands)
+    sigd, _, banded = _neutral_banded(docs, text_col, id_col, n, num_hashes, bands)
     try:
-        # Candidates stay the banded self-join (see minhash_lsh_pairs —
-        # AQE exchange reuse already collapses the two banded shuffles;
-        # the aggregated-expansion shape measured slower). Verification
-        # is bounded-broadcast (_verified_jaccard).
-        left = banded.select("band", "key", F.col("doc_id").alias("doc_id_a"))
-        right = banded.select("band", "key", F.col("doc_id").alias("doc_id_b"))
-        candidates = (
-            left.join(right, on=["band", "key"])
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .select("doc_id_a", "doc_id_b")
-            .distinct()
-        )
-        sh = sigd.select("doc_id", "shingles")
-        return _verified_jaccard(candidates, sh, threshold).localCheckpoint(
-            eager=True
-        )
+        return _verified_jaccard(
+            _band_candidates(banded), sigd, sigd, threshold
+        ).localCheckpoint(eager=True)
     finally:
         sigd.unpersist()
 
@@ -771,36 +766,19 @@ def minhash_index_frames(
     num_hashes: int = 64,
     bands: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
-    """The write-once materialization of an LSH index shard: the
-    (doc_id, shingles) verification frame and the (doc_id, band, key)
-    banded frame for a batch — what "re-bandable from stored signatures"
-    means in practice. A streaming/daily pipeline writes these two frames
-    per ingested batch and probes FUTURE batches against the stored
-    index with minhash_lsh_probe_index: the corpus text is never
-    re-shingled or re-minhashed (st88 previously re-hashed the whole
-    accumulated corpus every micro-batch). Both frames are eagerly
-    materialized. The shingle frame _neutral_banded returns IS already
-    the (doc_id, shingles) checkpoint — re-checkpointing it was a pure
-    copy job (removed, optimization r14)."""
-    sigd, banded = _neutral_banded(docs, text_col, id_col, n, num_hashes, bands)
-    bb = banded.localCheckpoint(eager=True)
-    return sigd, bb
+    """One LSH index shard: the (doc_id, shingles) verification frame and
+    the (doc_id, band, key) banded frame for a batch — what "re-bandable
+    from stored signatures" means in practice. A streaming/daily pipeline
+    writes these two frames per ingested batch and probes FUTURE batches
+    against the stored index with minhash_lsh_probe_index: the corpus
+    text is never re-shingled or re-minhashed.
 
-
-def minhash_index_frames_lazy(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """minhash_index_frames WITHOUT materialization barriers, for callers
-    that write both frames straight to a durable sink (the streaming
-    index append path): the parquet write IS the materialization, so the
-    three eager localCheckpoint jobs of the materialized variant are pure
+    Both frames are LAZY, for callers that write them straight to a
+    durable sink (the streaming index append path): the parquet write IS
+    the materialization, so eager localCheckpoint barriers would be pure
     overhead there (optimization r14 — st88 dropped from ~3.4 to ~2 s per
-    micro-batch, see OPTIMIZATION_r14.md). Each returned frame recomputes
+    micro-batch, see OPTIMIZATION_r14.md). A caller that reads a frame
+    more than once checkpoints it itself. Each returned frame recomputes
     the batch's shingle scan when written (two scans of one micro-batch —
     cheap); the banded frame builds on shingled_grams' FUSED explode
     (hazard contract in _signature_agg) and is collapse-safe per
@@ -821,33 +799,18 @@ def minhash_lsh_probe_index(
 ) -> DataFrame:
     """Probe a new batch's index frames against a STORED index: candidate
     generation is one equi-join on (band, key); verification joins touch
-    only the two shingle frames. Identical math to
-    minhash_lsh_pairs_incremental — just with the corpus side's hashing
-    amortized into the one-time index write. Returns
-    (doc_id_new, doc_id_corpus, jaccard >= threshold)."""
-    candidates = (
-        new_bands.select("band", "key", F.col("doc_id").alias("doc_id_new"))
-        .join(
-            index_bands.select("band", "key", F.col("doc_id").alias("doc_id_corpus")),
-            on=["band", "key"],
-        )
-        .select("doc_id_new", "doc_id_corpus")
-        .distinct()
+    only the two shingle frames. The incremental reuse pattern — the
+    corpus side's hashing is amortized into the one-time index write, and
+    minhash_lsh_pairs_incremental is this probe over freshly banded
+    frames. Returns (doc_id_new, doc_id_corpus, jaccard >= threshold)."""
+    ids = ("doc_id_new", "doc_id_corpus")
+    return _verified_jaccard(
+        _band_candidates(new_bands, index_bands, *ids),
+        new_shingles,
+        index_shingles,
+        threshold,
+        *ids,
     )
-    verified = candidates.join(
-        new_shingles.select(F.col("doc_id").alias("doc_id_new"), F.col("shingles").alias("sh_a")),
-        on="doc_id_new",
-    ).join(
-        index_shingles.select(
-            F.col("doc_id").alias("doc_id_corpus"), F.col("shingles").alias("sh_b")
-        ),
-        on="doc_id_corpus",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return verified.select(
-        "doc_id_new", "doc_id_corpus", (inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_lsh_pairs_incremental(
@@ -869,34 +832,12 @@ def minhash_lsh_pairs_incremental(
     scales with the batch, not the corpus. Returns
     (doc_id_new, doc_id_corpus, jaccard ≥ threshold).
     """
-    sig_n, band_n = _neutral_banded(new_docs, text_col, id_col, n, num_hashes, bands)
-    sig_c, band_c = _neutral_banded(corpus, text_col, id_col, n, num_hashes, bands)
+    sig_n, _, band_n = _neutral_banded(new_docs, text_col, id_col, n, num_hashes, bands)
+    sig_c, _, band_c = _neutral_banded(corpus, text_col, id_col, n, num_hashes, bands)
     try:
-        candidates = (
-            band_n.select("band", "key", F.col("doc_id").alias("doc_id_new"))
-            .join(
-                band_c.select("band", "key", F.col("doc_id").alias("doc_id_corpus")),
-                on=["band", "key"],
-            )
-            .select("doc_id_new", "doc_id_corpus")
-            .distinct()
-        )
-        verified = (
-            candidates.join(
-                sig_n.select(F.col("doc_id").alias("doc_id_new"), F.col("shingles").alias("sh_a")),
-                on="doc_id_new",
-            ).join(
-                sig_c.select(F.col("doc_id").alias("doc_id_corpus"), F.col("shingles").alias("sh_b")),
-                on="doc_id_corpus",
-            )
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-        return (
-            verified.select("doc_id_new", "doc_id_corpus", (inter / union).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-            .localCheckpoint(eager=True)
-        )
+        return minhash_lsh_probe_index(
+            sig_n, band_n, sig_c, band_c, threshold
+        ).localCheckpoint(eager=True)
     finally:
         sig_n.unpersist()
         sig_c.unpersist()
@@ -995,24 +936,26 @@ def embedding_dup_pairs(
 _POW2 = [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per document: per bit b, sign of Σ_tokens ±1 by bit b
-    of xxhash64(token). Bit loop is an array transform over a constant
-    mask array — JVM-side, no UDF."""
-    # The token-hash array is STAGED as its own projection: the 64 mask
+def _simhash(
+    docs: DataFrame, text_col: str, id_col: str, token_hash, masks: list[int]
+) -> DataFrame:
+    """(doc_id, simhash): per bit mask m, the bit is set iff the sign of
+    Σ over the doc's DISTINCT tokens of ±1 (by ``token_hash(t) & m``) is
+    positive. ``token_hash(token_col) -> long Column``; ``masks`` are the
+    fingerprint's single-bit masks, one per bit. Bit loop is an array
+    transform over the constant mask array — JVM-side, no UDF."""
+    # The token-hash array is STAGED as its own projection: the mask
     # lambdas below each reference it, and interpreted HOF evaluation
     # would otherwise re-tokenize + re-hash the document once per bit
     # (same pathology as shingled()).
     staged = _spread(docs, weight=64).select(
         F.col(id_col).alias("doc_id"),
-        F.transform(
-            F.array_distinct(tokens(text_col)), lambda t: F.xxhash64(t)
-        ).alias("__hashes"),
+        F.transform(F.array_distinct(tokens(text_col)), token_hash).alias("__hashes"),
     )
     hashes = F.col("__hashes")
-    masks = F.array(*[F.lit(m).cast("long") for m in _POW2])
+    mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
     bit_counts = F.transform(
-        masks,
+        mask_arr,
         lambda m: F.aggregate(
             hashes,
             F.lit(0),
@@ -1022,7 +965,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     sim = F.aggregate(
         F.zip_with(
             bit_counts,
-            masks,
+            mask_arr,
             lambda cnt, m: F.when(cnt > 0, m).otherwise(F.lit(0).cast("long")),
         ),
         F.lit(0).cast("long"),
@@ -1031,28 +974,27 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return staged.select("doc_id", sim.alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
+def _simhash_pairs(
+    fingerprints: DataFrame, chunk_bits: int, max_hamming: int
 ) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) ≤ max_hamming. Banding: split
-    64 bits into 4 16-bit chunks; any pair within distance 3 shares ≥1
-    exact chunk (pigeonhole), so candidates come from 4 equi-joins, not a
-    cross join. Cache lifecycle: the fingerprint frame is persisted while
-    the (small) pair result materializes — without the barrier the 4
-    chunk expressions × 2 join sides recompute the 64-bit-loop aggregate
-    8× per row via projection collapse — then released before returning;
-    the caller gets an eagerly-materialized pair frame whose blocks the
+    """Near-dup pairs (doc_id_a < doc_id_b, hamming ≤ max_hamming) over a
+    (doc_id, simhash) frame. Banding: the fingerprint splits into 4
+    ``chunk_bits``-bit chunks; any pair within distance 3 shares ≥1 exact
+    chunk (pigeonhole), so candidates come from one equi-join on (chunk,
+    value), not a cross join, and exact Hamming verifies them. Cache
+    lifecycle: the fingerprint frame is persisted while the (small) pair
+    result materializes — without the barrier the 4 chunk expressions ×
+    2 join sides recompute the bit-loop aggregate 8× per row via
+    projection collapse — then released before returning; the caller
+    gets an eagerly-materialized pair frame whose blocks the
     ContextCleaner frees on dereference."""
-    sh = simhash(docs, text_col, id_col).persist()
+    sh = fingerprints.persist()
     chunk_structs = F.array(
         *[
             F.struct(
                 F.lit(i).alias("chunk"),
-                F.shiftrightunsigned("simhash", i * 16)
-                .bitwiseAND(F.lit(0xFFFF).cast("long"))
+                F.shiftrightunsigned("simhash", i * chunk_bits)
+                .bitwiseAND(F.lit((1 << chunk_bits) - 1).cast("long"))
                 .alias("chunk_val"),
             )
             for i in range(4)
@@ -1077,40 +1019,37 @@ def simhash_pairs(
         sh.unpersist()
 
 
+def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """64-bit SimHash per document: per bit b, sign of Σ_tokens ±1 by bit b
+    of xxhash64(token). See _simhash."""
+    return _simhash(docs, text_col, id_col, lambda t: F.xxhash64(t), _POW2)
+
+
+def simhash_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Near-dup pairs with Hamming(simhash) ≤ max_hamming: 4 16-bit chunks
+    of the 64-bit fingerprint, candidate equi-join on (chunk, value),
+    exact Hamming verify. Returns (doc_id_a, doc_id_b, hamming); see
+    _simhash_pairs."""
+    return _simhash_pairs(simhash(docs, text_col, id_col), 16, max_hamming)
+
+
 def simhash_neutral(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """48-bit SimHash with the engine-neutral md5 token hash (first 12 md5
-    hex digits = 48 independent bits), so the whole fingerprint is
-    reproducible in ANSI SQL. Same plan shape as the xxhash64 variant:
-    staged token-hash array (see simhash), bit loop as an array
-    transform, no UDFs."""
-    # full 48-bit value (no mod-P reduction — bits must stay independent)
-    staged = _spread(docs, weight=64).select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            F.array_distinct(tokens(text_col)),
-            lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("long"),
-        ).alias("__hashes"),
+    hex digits = 48 independent bits, the full value — no mod-P reduction,
+    bits must stay independent), so the whole fingerprint is reproducible
+    in ANSI SQL. Same plan shape as the xxhash64 variant (_simhash)."""
+    return _simhash(
+        docs,
+        text_col,
+        id_col,
+        lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("long"),
+        [1 << b for b in range(48)],
     )
-    hashes = F.col("__hashes")
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(48)])
-    bit_counts = F.transform(
-        masks,
-        lambda m: F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    sim = F.aggregate(
-        F.zip_with(
-            bit_counts,
-            masks,
-            lambda cnt, m: F.when(cnt > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return staged.select("doc_id", sim.alias("simhash"))
 
 
 def simhash_pairs_neutral(
@@ -1122,36 +1061,8 @@ def simhash_pairs_neutral(
     """simhash_pairs over the engine-neutral 48-bit fingerprint: 4 chunks
     of 12 bits (pigeonhole covers Hamming ≤ 3), candidate equi-join on
     (chunk, value), exact Hamming verify. Returns
-    (doc_id_a, doc_id_b, hamming). Cache lifecycle — see simhash_pairs."""
-    sh = simhash_neutral(docs, text_col, id_col).persist()
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("chunk"),
-                F.shiftrightunsigned("simhash", i * 12)
-                .bitwiseAND(F.lit(0xFFF).cast("long"))
-                .alias("chunk_val"),
-            )
-            for i in range(4)
-        ]
-    )
-    chunks = sh.select("doc_id", "simhash", F.explode(chunk_structs).alias("cc")).select(
-        "doc_id", "simhash", "cc.chunk", "cc.chunk_val"
-    )
-    a = chunks.select("chunk", "chunk_val", F.col("doc_id").alias("doc_id_a"), F.col("simhash").alias("sh_a"))
-    b = chunks.select("chunk", "chunk_val", F.col("doc_id").alias("doc_id_b"), F.col("simhash").alias("sh_b"))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    try:
-        return (
-            a.join(b, on=["chunk", "chunk_val"])
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .select("doc_id_a", "doc_id_b", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        sh.unpersist()
+    (doc_id_a, doc_id_b, hamming)."""
+    return _simhash_pairs(simhash_neutral(docs, text_col, id_col), 12, max_hamming)
 
 
 def minhash_estimation_report(
@@ -1170,26 +1081,13 @@ def minhash_estimation_report(
     error concentrates as ~1/sqrt(num_hashes), and the report makes the
     tradeoff measurable on real data instead of assumed. Engine-neutral
     hash family, so the whole evaluation is oracle-checkable."""
-    # Builds its own signature frame: unlike the pairs pipeline, the
-    # estimator consumes BOTH the stored shingles and the signature per
-    # pair side, so the (doc_id, signature) checkpoint joins back onto
-    # the shingle checkpoint here (r14 — _neutral_banded no longer
-    # carries the signature column on the shingle frame).
-    s = shingled(docs, text_col, id_col, n, spread_weight=64)
-    sigd = s.localCheckpoint(eager=True)
-    grams = sigd.select("doc_id", F.explode("shingles").alias("gram"))
-    sig_small = _neutral_signature(grams, num_hashes).localCheckpoint(eager=True)
-    banded = _band_key_explode(sig_small, num_hashes, bands)
+    # Unlike the pairs pipeline, the estimator consumes BOTH the stored
+    # shingles and the signature per pair side, so the (doc_id, signature)
+    # checkpoint joins back onto the shingle checkpoint.
+    sigd, sig, banded = _neutral_banded(docs, text_col, id_col, n, num_hashes, bands)
     try:
-        left = banded.select("band", "key", F.col("doc_id").alias("doc_id_a"))
-        right = banded.select("band", "key", F.col("doc_id").alias("doc_id_b"))
-        candidates = (
-            left.join(right, on=["band", "key"])
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .select("doc_id_a", "doc_id_b")
-            .distinct()
-        )
-        sides = sigd.join(sig_small, "doc_id").select(
+        candidates = _band_candidates(banded)
+        sides = sigd.join(sig, "doc_id").select(
             "doc_id", "shingles", "signature"
         )
         pair = candidates.join(
@@ -1210,10 +1108,8 @@ def minhash_estimation_report(
         matches = F.size(
             F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
         )
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
         est = matches.cast("double") / F.lit(float(num_hashes))
-        exact = inter / union
+        exact = _jaccard("sh_a", "sh_b")
         out = pair.select(
             "doc_id_a",
             "doc_id_b",
@@ -1636,8 +1532,8 @@ def bloom_decontaminate(
 
     ``with_exact=True`` (optimization r15, guide §2.3/§2.4) additionally
     returns ``exact_flagged`` = 1 iff any of the doc's grams is LITERALLY
-    in the eval set, computed in the SAME pass: a broadcast left join of
-    the distinct eval grams onto the probe rows, absorbed by the same
+    in the eval set, computed in the SAME pass: a left join of the
+    distinct eval grams onto the probe rows, absorbed by the same
     doc-level aggregation. The d59/d65 callers previously derived this
     via a second ``train_grams`` semi-join — a full second scan+shingle
     of the train split, its own exchange, and a doc-level join to stitch
@@ -1645,37 +1541,28 @@ def bloom_decontaminate(
     distinct(semi-join doc_ids) left-joined onto the bloom frame with
     coalesce(flag, 0); max(gram-in-eval) over exactly the same probe
     rows produces the same per-doc bit for the same doc set (both frames
-    keyed by the identical train_grams rows). The eval gram set is
-    broadcast raw here, which is fine at any scale where the old
-    semi-join already planned a broadcast — and when it does not fit,
-    the old shape was already shuffling every train gram, so nothing is
-    lost by scale either.
+    keyed by the identical train_grams rows). The join strategy is left
+    to the planner, like the semi-join it replaced: the eval gram set
+    broadcasts where it fits, and past the broadcast cap the join
+    shuffles instead of failing.
     """
     seeds = F.array(*[F.lit(s) for s in range(n_hashes)])
 
-    def positions(df: DataFrame) -> DataFrame:
-        return df.select(
-            id_col,
-            gram_col,
-            F.explode(seeds).alias("seed"),
-        ).select(
-            id_col,
-            gram_col,
-            "seed",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.col("seed"), F.col(gram_col))), 1, 12
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % m_bits
-            ).alias("pos"),
+    def pos_for(seed) -> "F.Column":
+        return (
+            F.conv(
+                F.substring(F.md5(F.concat_ws(":", seed, F.col(gram_col))), 1, 12),
+                16,
+                10,
+            ).cast("bigint")
+            % m_bits
         )
 
     words = (
-        positions(eval_grams.select(F.lit(0).alias(id_col), gram_col).distinct())
+        eval_grams.select(gram_col)
+        .distinct()
+        .select(F.explode(seeds).alias("seed"), gram_col)
+        .select(pos_for(F.col("seed")).alias("pos"))
         .groupBy(F.expr("pos div 63").alias("w"))
         .agg(
             F.expr(
@@ -1701,22 +1588,10 @@ def bloom_decontaminate(
     # positions are set (the per-seed left join + coalesce(bits, 0)
     # reads an untouched word as all-zero = guaranteed miss), duplicate
     # (doc, gram) rows simply produce identical hit rows under max().
-    def pos_for(seed: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.lit(seed), F.col(gram_col))), 1, 12
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % m_bits
-        )
-
     probe = train_grams.select(
         id_col,
         *([gram_col] if with_exact else []),
-        *[pos_for(s).alias(f"__p{s}") for s in range(n_hashes)],
+        *[pos_for(F.lit(s)).alias(f"__p{s}") for s in range(n_hashes)],
     )
     hit = F.lit(True)
     for s in range(n_hashes):
@@ -1736,11 +1611,7 @@ def bloom_decontaminate(
         ev_set = eval_grams.select(
             F.col(gram_col).alias("__ev_gram")
         ).distinct().withColumn("__ev_hit", F.lit(1))
-        probe = probe.join(
-            F.broadcast(ev_set),
-            F.col(gram_col) == F.col("__ev_gram"),
-            "left",
-        )
+        probe = probe.join(ev_set, F.col(gram_col) == F.col("__ev_gram"), "left")
         return (
             probe.select(
                 id_col,

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from pymongraph_spark.catalog import load_tables, scratch_dir
 from pymongraph_spark.graph.model import PropertyGraph
+from pymongraph_spark.graph.store import _gc_grace_seconds
 from pymongraph_spark.graph.traversal import find_neighbors, induced_subgraph, k_hop
 from pymongraph_spark.graph.writes import delete_vertices, upsert_vertices
 from pymongraph_spark.queries.registry import query
@@ -188,13 +189,9 @@ def tpch_adjacency(spark: SparkSession, sf_dir: str):
 # (_touch_last_used), so a concurrent process that resolved its prefix to
 # the old generation BEFORE testdata regeneration keeps its files alive
 # while it is still querying them; 30 min comfortably exceeds any single
-# query/bench run in this repo. Overridable for tests — read at CALL
-# time (like store.save's version GC) so setting the env var after
-# import behaves the same for every GC in the repo.
-
-
-def _gc_grace_seconds() -> int:
-    return int(os.environ.get("SPARKGRAPH_GC_GRACE_SECONDS", "1800"))
+# query/bench run in this repo. The window is the store's
+# SPARKGRAPH_GC_GRACE_SECONDS reader (store._gc_grace_seconds, read at
+# call time), so every GC in the repo parses the variable one way.
 
 
 def _mark_graph_cache_used(spark: SparkSession, prefix: str) -> None:
@@ -221,10 +218,10 @@ def _recently_used(path: str) -> bool:
     the dir mtime) falls within the GC grace window."""
     marker = os.path.join(path, "_LAST_USED")
     try:
-        ts = int(open(marker).read().strip())
+        ts = float(open(marker).read().strip())
     except (OSError, ValueError):
         try:
-            ts = int(os.stat(path).st_mtime)
+            ts = os.stat(path).st_mtime
         except OSError:
             return False
     return (time.time() - ts) < _gc_grace_seconds()

@@ -498,7 +498,7 @@ def st88_streaming_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous near-dup screening: documents arrive in micro-batches
     (one file per ingest wave, ``doc_id % 4`` is the wave id), and each
     foreachBatch probes the arriving batch against the STANDING index
-    (minhash_lsh_pairs_incremental — cost scales with the batch, never
+    (minhash_lsh_probe_index — cost scales with the batch, never
     corpus²), appends the verified cross-wave pairs to a result sink,
     then appends the batch itself to the index. Because every unordered
     cross-wave pair is produced exactly when its later-arriving member
@@ -513,7 +513,7 @@ def st88_streaming_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pymongraph_spark.catalog import load_tables
     from pymongraph_spark.operators.dedup import (
-        minhash_index_frames_lazy,
+        minhash_index_frames,
         minhash_lsh_probe_index,
     )
     from pymongraph_spark.session import run_concurrently
@@ -568,7 +568,7 @@ def st88_streaming_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # absorbed by the read-back distinct().
         old_sh = sorted(_data_files(index_sh_dir)) if os.path.isdir(index_sh_dir) else []
         old_bb = sorted(_data_files(index_bb_dir)) if os.path.isdir(index_bb_dir) else []
-        sh, bb = minhash_index_frames_lazy(batch_df, n=3, num_hashes=64, bands=16)
+        sh, bb = minhash_index_frames(batch_df, n=3, num_hashes=64, bands=16)
         run_concurrently(
             lambda: sh.write.mode("append").parquet(index_sh_dir),
             lambda: bb.write.mode("append").parquet(index_bb_dir),

@@ -84,6 +84,11 @@ def probe_index_sensitivity(spark, small: str, big: str, out: dict) -> None:
         minhash_lsh_probe_index,
     )
 
+    def _checkpointed(frames):
+        # eager, so the timed probes read stored frames and the build
+        # time covers the whole hashing
+        return tuple(f.localCheckpoint(eager=True) for f in frames)
+
     base = tempfile.mkdtemp(prefix="sparkgraph_stream_probe_")
     try:
         result: dict[str, dict] = {}
@@ -102,13 +107,13 @@ def probe_index_sensitivity(spark, small: str, big: str, out: dict) -> None:
                 .select((F.col("doc_id") + 100_000_000).alias("doc_id"), "text")
                 .localCheckpoint(eager=True)
             )
-            new_sh, new_bb = minhash_index_frames(probe_docs)
+            new_sh, new_bb = _checkpointed(minhash_index_frames(probe_docs))
             sh_dir = os.path.join(base, tag, "sh")
             bb_dir = os.path.join(base, tag, "bb")
             corpus = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
             n_corpus = corpus.count()
             t0 = time.perf_counter()
-            sh, bb = minhash_index_frames(corpus)
+            sh, bb = _checkpointed(minhash_index_frames(corpus))
             sh.write.mode("overwrite").parquet(sh_dir)
             bb.write.mode("overwrite").parquet(bb_dir)
             build_s = round(time.perf_counter() - t0, 3)

@@ -165,6 +165,20 @@ def test_stale_cache_gc_is_age_gated(spark, monkeypatch):
                 shutil.rmtree(d, ignore_errors=True)
 
 
+def test_cache_gc_grace_accepts_fractional_seconds(tmp_path, monkeypatch):
+    """The cache GC reads SPARKGRAPH_GC_GRACE_SECONDS the way the store's
+    GC does (a float). A fractional window must age out a dir last used
+    10 s ago instead of raising — drop_stale_generations swallows the
+    error, which would leave every stale generation on disk."""
+    import time as _time
+
+    from pymongraph_spark.queries import graph as qgraph
+
+    monkeypatch.setenv("SPARKGRAPH_GC_GRACE_SECONDS", "0.5")
+    (tmp_path / "_LAST_USED").write_text(str(int(_time.time()) - 10))
+    assert qgraph._recently_used(str(tmp_path)) is False
+
+
 def test_q61_bucketed_pair_join_is_exchange_free(spark, sf_small):
     from pymongraph_spark.queries.relational import bucketed_orderkey_join
 

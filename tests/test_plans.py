@@ -524,6 +524,28 @@ def test_shingled_grams_single_construction(spark):
     assert sorted(map(tuple, fused.collect())) == sorted(map(tuple, late.collect()))
 
 
+def test_bloom_with_exact_leaves_eval_join_to_planner(spark):
+    """bloom_decontaminate(with_exact=True) must not force-broadcast the
+    distinct eval-gram set: a hint hard-fails once that set outgrows the
+    broadcast cap. With auto-broadcast off, the only BroadcastHashJoins
+    left are the n_hashes bounded lookups into the filter words."""
+    from pymongraph_spark.operators.dedup import bloom_decontaminate, shingled_grams
+
+    grams = shingled_grams(load_tables(spark, SF_SMALL)["documents"], n=8)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = bloom_decontaminate(
+            grams.filter("doc_id % 10 != 0"),
+            grams.filter("doc_id % 10 = 0"),
+            n_hashes=3,
+            with_exact=True,
+        )
+        assert _plan(out).count("BroadcastHashJoin") == 3
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_t103_replace_chain_evaluated_once(spark):
     """VERDICT r10 blemish 2: t103's 12-deep nested replace chain must be
     evaluated once per row STRUCTURALLY (hoisted through one aliased

@@ -95,6 +95,53 @@ def test_simhash_neutral_locality(spark):
     assert ham(1, 4) > 12
 
 
+def test_simhash_golden_values(spark):
+    """Pins both SimHash families bit for bit — fingerprints and pair
+    sets — on fixed texts: doc 2 is doc 1 with one token replaced, docs 3
+    and 4 are unrelated. Both families share one fingerprint fold and
+    one chunk join, so a change there must not move a single bit."""
+    from pymongraph_spark.operators.dedup import (
+        simhash,
+        simhash_neutral,
+        simhash_pairs,
+        simhash_pairs_neutral,
+    )
+
+    base = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
+        "lima mike november oscar papa quebec romeo sierra tango uniform "
+        "victor whiskey xray yankee zulu red orange yellow green blue indigo "
+        "violet black white grey silver gold copper iron tin lead zinc nickel "
+        "cobalt carbon oxygen hydrogen helium neon argon krypton xenon radon "
+        "sodium potassium calcium magnesium"
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace("alpha", "omega")),
+            (3, "graph engines answer neighbor queries over vertices and edges "
+                "stored as columnar tables"),
+            (4, "the quick brown fox jumps over the lazy dog"),
+        ],
+        "doc_id: long, text: string",
+    )
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    assert rows(simhash(docs)) == [
+        (1, -4174836612424736243),
+        (2, -4174695874936380915),
+        (3, 7910320486718903531),
+        (4, 1649482817916862672),
+    ]
+    assert rows(simhash_neutral(docs)) == [
+        (1, 254613246264776),
+        (2, 254612172531144),
+        (3, 274271147803942),
+        (4, 17404159116555),
+    ]
+    assert rows(simhash_pairs(docs)) == [(1, 2, 1)]
+    assert rows(simhash_pairs_neutral(docs)) == [(1, 2, 2)]
+
+
 def test_token_jaccard_band_blocking_is_lossless(spark, sf_small):
     """The shingle-count band added to token_jaccard_pairs' join key must
     not lose qualifying pairs: compare against an unbanded brute-force
