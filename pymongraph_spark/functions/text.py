@@ -194,7 +194,7 @@ def bpe_learn_merges(
       production 32k-merge vocab, probed flat-or-declining per merge at
       n_merges=256 (SCALE_PROBE_bpe_r11.json);
     - the maintained counts live in a DRIVER DICT, like the k×dim
-      centroid matrix of grid_kmeans_cells_fast: distinct (left, right)
+      centroid matrix grid_kmeans_cells_fast returns: distinct (left, right)
       SYMBOL pairs are bounded by the merge budget and the base charset
       (≤ 36² at start, +O(symbols) per merge — what HF/Sennrich trainers
       hold in RAM), independent of corpus and vocabulary size. Winner

@@ -872,47 +872,20 @@ def embedding_dup_pairs(
     if method == "exact":
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     elif method == "lsh":
-        from itertools import combinations
-
-        from pymongraph_spark.operators.similarity import _bucket_expr
+        from pymongraph_spark.operators.similarity import _lsh_buckets
 
         if dim is None:
             raise ValueError("method='lsh' requires dim")
-        masks = [0]
-        for r in range(1, probe_radius + 1):
-            masks.extend(
-                sum(1 << i for i in bits)
-                for bits in combinations(range(n_planes), r)
-            )
 
-        def buckets(df, out_id, probe):
-            # one bucket expression per table, probe masks applied to the
-            # computed COLUMN post-explode (see similarity.lsh_topk: a
-            # column per mask would copy the literal hyperplane tree
-            # masks× times and blow up codegen/driver memory)
-            raw = df.select(
-                F.col(id_col).alias(out_id),
-                F.explode(
-                    F.array(*[
-                        _bucket_expr(vec_col, dim, n_planes, seed + 7919 * t)
-                        .bitwiseOR(F.lit(t << n_planes).cast("long"))
-                        for t in range(n_tables)
-                    ])
-                ).alias("__raw"),
-            )
-            if not probe or masks == [0]:
-                return raw.withColumnRenamed("__raw", "bucket")
-            mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
-            return raw.select(
-                out_id,
-                F.explode(
-                    F.transform(mask_arr, lambda m: F.col("__raw").bitwiseXOR(m))
-                ).alias("bucket"),
+        def buckets(out_id, probe_radius):
+            return _lsh_buckets(
+                _spread(emb, weight=64), {out_id: id_col}, vec_col,
+                dim, n_planes, n_tables, seed, probe_radius,
             )
 
         cand = (
-            buckets(_spread(emb, weight=64), "id_a", probe=False)
-            .join(buckets(_spread(emb, weight=64), "id_b", probe=True), on="bucket")
+            buckets("id_a", 0)
+            .join(buckets("id_b", probe_radius), on="bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .distinct()
@@ -1152,7 +1125,6 @@ def semdedup(
     """
     from pymongraph_spark.operators.similarity import (
         GRID_SCALE,
-        _l2sq_arr,
         grid_kmeans_cells_fast,
         grid_seeds,
         quantize_arr,
@@ -1163,24 +1135,22 @@ def semdedup(
     # broadcast-matrix assignment: k must grow with the corpus here, and
     # the exploded-row grid_assign measured 23.7× for 10× data at scaled
     # k (SCALE_PROBE_corpus_sf1.json) — the fast path is bit-identical
-    cells, _ = grid_kmeans_cells_fast(qa, seeds, iters)
-    arr = quantize_arr(emb, id_col, vec_col, GRID_SCALE, out="__q").join(
-        cells, "vec_id"
-    )
-    return _dedup_within_cells(arr, cells, threshold_l2sq)
+    cells, _, _ = grid_kmeans_cells_fast(qa, seeds, iters)
+    return _dedup_within_cells(qa, cells, threshold_l2sq)
 
 
 def _dedup_within_cells(
-    arr: DataFrame, cells: DataFrame, threshold_l2sq: int
+    qa: DataFrame, cells: DataFrame, threshold_l2sq: int
 ) -> DataFrame:
     """The SemDeDup decision, shared by the flat and hierarchical
     clusterers: within each cell, a vector is removed when a lower-id
-    vector sits within the integer L2² threshold. arr is
-    (vec_id, __q array<long>, cell); cells is (vec_id, cell) for every
+    vector sits within the integer L2² threshold. qa is
+    (vec_id, qarr array<long>); cells is (vec_id, cell) for every
     input vector (the join back preserves vectors whose cell produced
     no pairs)."""
     from pymongraph_spark.operators.similarity import _l2sq_arr
 
+    arr = qa.withColumnRenamed("qarr", "__q").join(cells, "vec_id")
     a = arr.select(F.col("vec_id").alias("id_a"), F.col("__q").alias("__qa"), "cell")
     b = arr.select(F.col("vec_id").alias("id_b"), F.col("__q").alias("__qb"), "cell")
     pairs = (
@@ -1205,33 +1175,36 @@ def _dedup_within_cells(
 _LEAF_STRIDE = 1 << 20  # leaf cell id = coarse_cell * stride + fine index
 
 
+def _two_level_k(k_clusters: int) -> tuple[int, int]:
+    """(k1, k2) of the two-level codebook: k1 = ceil(√k) coarse cells
+    (at least 2), k2 = ceil(k/k1) fine cells per coarse cell. Raises
+    when k2 would reach the leaf stride — leaf ids would alias across
+    coarse cells."""
+    import math
+
+    k1 = max(2, math.isqrt(max(k_clusters - 1, 0)) + 1)  # ceil(sqrt(k))
+    k2 = max(1, -(-k_clusters // k1))  # ceil(k / k1)
+    if k2 >= _LEAF_STRIDE:
+        raise ValueError(
+            f"fine cluster count k2={k2} >= 2^20 leaf stride; "
+            f"k_clusters={k_clusters} needs a larger _LEAF_STRIDE"
+        )
+    return k1, k2
+
+
 def _fine_lloyd(ids, q, kk, iters):
     """The per-coarse-cell fine Lloyd's loop of semdedup_hierarchical,
-    factored so the streaming codebook extractor (hierarchical_codebook)
-    trains EXACTLY the same fine centroids the batch operator assigns
+    shared with the streaming codebook extractor (hierarchical_codebook)
+    so it trains EXACTLY the fine centroids the batch operator assigns
     against. Seeds are the kk smallest vec_ids' vectors in ascending id
-    order; per round: first-min argmin assignment (similarity._argmin
-    _kernel — the grid tie-break), empty fine clusters DROPPED exactly
-    like the grid family's groupBy mean update, truncated-toward-zero
-    integer-division mean (sum div count, sign-adjusted for numpy's
-    floor semantics). Returns (cent, idx): the FINAL fine centroid
-    matrix with rows in ascending original-fine-id order and their
-    surviving fine ids."""
+    order; the rounds are the grid's similarity._lloyd. Returns (cent,
+    idx): the FINAL fine centroid matrix with rows in ascending
+    original-fine-id order and their surviving fine ids."""
     import numpy as np
 
-    from pymongraph_spark.operators.similarity import _argmin_kernel
+    from pymongraph_spark.operators.similarity import _lloyd
 
-    cent = q[np.argsort(ids)[:kk]].copy()  # smallest ids seed, in id order
-    idx = np.arange(kk, dtype=np.int64)  # fine id of each centroid row
-    for _ in range(iters):
-        pos = _argmin_kernel(cent)(q)
-        sums = np.zeros_like(cent)
-        np.add.at(sums, pos, q)
-        counts = np.bincount(pos, minlength=len(idx))
-        nz = counts > 0
-        s, c = sums[nz], counts[nz][:, None]
-        cent, idx = np.sign(s) * (np.abs(s) // c), idx[nz]
-    return cent, idx
+    return _lloyd(q, q[np.argsort(ids)[:kk]], np.arange(kk, dtype=np.int64), iters)
 
 
 def semdedup_hierarchical(
@@ -1266,10 +1239,8 @@ def semdedup_hierarchical(
     truncated-division mean updates.
 
     Returns the semdedup contract: (vec_id, cell, removed, dup_of),
-    cell = coarse*2^20 + fine (fine < 2^20 asserted per group).
+    cell = coarse*2^20 + fine (_two_level_k keeps fine < 2^20).
     """
-    import math
-
     from pymongraph_spark.operators.similarity import (
         GRID_SCALE,
         grid_kmeans_cells_fast,
@@ -1277,20 +1248,9 @@ def semdedup_hierarchical(
         quantize_arr,
     )
 
-    k1 = max(2, math.isqrt(max(k_clusters - 1, 0)) + 1)  # ceil(sqrt(k))
-    k2 = max(1, -(-k_clusters // k1))  # ceil(k / k1)
-    if k2 >= _LEAF_STRIDE:
-        # validate ONCE at entry, fail-loud (the per-group assert below is
-        # stripped under python -O and fires only after the driver already
-        # chose an invalid k2 — leaf ids would alias across coarse cells)
-        raise ValueError(
-            f"fine cluster count k2={k2} >= 2^20 leaf stride; "
-            f"k_clusters={k_clusters} needs a larger _LEAF_STRIDE"
-        )
-
+    k1, k2 = _two_level_k(k_clusters)
     qa = quantize_arr(emb, id_col, vec_col, GRID_SCALE, out="qarr")
-    coarse, _ = grid_kmeans_cells_fast(qa, grid_seeds(emb, k1, id_col), iters)
-    grouped = qa.join(coarse, "vec_id")
+    coarse, _, _ = grid_kmeans_cells_fast(qa, grid_seeds(emb, k1, id_col), iters)
 
     def refine(pdf):
         import numpy as np
@@ -1298,25 +1258,21 @@ def semdedup_hierarchical(
 
         from pymongraph_spark.operators.similarity import _argmin_kernel
 
-        coarse_cell = int(pdf["cell"].iloc[0])
         ids = pdf["vec_id"].to_numpy()
         q = np.stack(pdf["qarr"].to_numpy()).astype(np.int64)
-        kk = min(k2, len(pdf))
-        assert kk < _LEAF_STRIDE, (
-            f"fine cluster count {kk} >= 2^20 — raise _LEAF_STRIDE"
-        )
-        cent, idx = _fine_lloyd(ids, q, kk, iters)
+        cent, idx = _fine_lloyd(ids, q, min(k2, len(pdf)), iters)
         return pd.DataFrame(
-            {"vec_id": ids, "cell": coarse_cell * _LEAF_STRIDE + idx[_argmin_kernel(cent)(q)]}
+            {
+                "vec_id": ids,
+                "cell": int(pdf["cell"].iloc[0]) * _LEAF_STRIDE
+                + idx[_argmin_kernel(cent)(q)],
+            }
         )
 
-    leaves = grouped.groupBy("cell").applyInPandas(
+    leaves = qa.join(coarse, "vec_id").groupBy("cell").applyInPandas(
         refine, schema="vec_id bigint, cell bigint"
     )
-    arr = quantize_arr(emb, id_col, vec_col, GRID_SCALE, out="__q").join(
-        leaves, "vec_id"
-    )
-    return _dedup_within_cells(arr, leaves, threshold_l2sq)
+    return _dedup_within_cells(qa, leaves, threshold_l2sq)
 
 
 def codebook_k_for(n_vectors: int, target_occupancy: int = 125) -> int:
@@ -1356,8 +1312,8 @@ def hierarchical_codebook(
     so assignment stays map-only at any k∝corpus).
 
     Returns ``(cells_arr, cmat, fine_cb)``: the coarse centroid matrix
-    (ascending cell ids, k1×dim int64 — what grid_assign_whole_fast
-    broadcasts) plus ``fine_cb`` mapping each coarse cell to its
+    (ascending cell ids, k1×dim int64, as grid_kmeans_cells_fast
+    returns it) plus ``fine_cb`` mapping each coarse cell to its
     surviving fine centroids ``(fine_ids int64[], fine_cmat int64
     [k2_g×dim])`` in ascending-fine-id order. Total size is k×dim —
     bounded like MLlib's broadcast centroids, NOT corpus-scale.
@@ -1373,28 +1329,20 @@ def hierarchical_codebook(
     path (queries/streaming.py) trains on the standing index's stored
     qarr this way; re-quantizing at GRID_SCALE would scale the grid a
     second time and change the truncated-mean centroids."""
-    import math
-
     from pymongraph_spark.operators.similarity import (
         GRID_SCALE,
-        _centroid_matrix,
         grid_kmeans_cells_fast,
         grid_seeds,
         quantize_arr,
     )
 
-    k1 = max(2, math.isqrt(max(k_clusters - 1, 0)) + 1)
-    k2 = max(1, -(-k_clusters // k1))
-    if k2 >= _LEAF_STRIDE:
-        raise ValueError(
-            f"fine cluster count k2={k2} >= 2^20 leaf stride; "
-            f"k_clusters={k_clusters} needs a larger _LEAF_STRIDE"
-        )
+    k1, k2 = _two_level_k(k_clusters)
     qa = quantize_arr(
         emb, id_col, vec_col, GRID_SCALE if scale is None else scale, out="qarr"
     )
-    coarse, cent = grid_kmeans_cells_fast(qa, grid_seeds(emb, k1, id_col), iters)
-    cells_arr, cmat = _centroid_matrix(cent)
+    coarse, cells_arr, cmat = grid_kmeans_cells_fast(
+        qa, grid_seeds(emb, k1, id_col), iters
+    )
 
     def emit(pdf):
         import numpy as np
@@ -1415,7 +1363,7 @@ def hierarchical_codebook(
         qa.join(coarse, "vec_id")
         .groupBy("cell")
         .applyInPandas(emit, schema="coarse bigint, fine bigint, cent array<bigint>")
-        .collect()  # bounded by k×dim — driver metadata, like _centroid_matrix
+        .collect()  # bounded by k×dim — driver metadata, like cmat
     )
     import numpy as np
 

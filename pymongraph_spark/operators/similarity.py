@@ -1,15 +1,38 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute_force_topk — exact cosine top-k: queries broadcast against the
-  corpus, ranked per query. The correctness baseline; O(|Q|·n) but the
-  corpus side never shuffles (queries are broadcast), so it scales out
-  linearly with executors.
-- lsh_topk — random-hyperplane (sign) LSH: bucket by sign bits, search
-  only same-bucket (± multi-probe) candidates, exact re-rank. The 100 TB
-  path: candidate generation is an equi-join on bucket keys.
+Every search here is one pruning step feeding one shared ranking step
+(``_rank_topk``: per-query row_number over (score, neighbor id)).
 
-Dot products use strict left-fold aggregates (functions/vectors.py) so
-scores are bit-stable across engines and partitionings.
+Float tier — production paths, strict left-fold dot products
+(functions/vectors.py) so scores are bit-stable across engines and
+partitionings:
+- brute_force_topk / brute_force_topk_vectorized — exact cosine top-k,
+  queries broadcast against the corpus (expression-tree fold, or one
+  numpy matmul per Arrow batch when fold order may differ);
+- lsh_topk — random-hyperplane (sign) LSH, multi-probe and multi-table;
+  candidates are an equi-join on bucket keys (``_lsh_buckets``, shared
+  with dedup.embedding_dup_pairs), then exact re-rank;
+- ivf_assign / ivf_topk / kmeans_centroids — IVF coarse quantization
+  with a pure-DataFrame Lloyd's loop;
+- pq_codebooks / pq_encode / pq_topk_adc / ivfpq_topk — product
+  quantization and IVF+PQ asymmetric-distance search;
+- jl_project — Johnson-Lindenstrauss sign projection.
+Shared float helpers: ``_scored_cells`` (every vector against every
+broadcast centroid, the one metric check), ``_subspace_slices`` (the PQ
+subspace split), ``_decimal_means`` (the decimal-grid mean update) and
+``_adc_rank``.
+
+Exact-grid tier — the same algorithms on floor(val·1e6) BIGINTs, so a
+SQL oracle can replay them bit for bit (see the section header below):
+quantize_dims / quantize_arr, grid_seeds, grid_assign +
+grid_kmeans_codebook (the exploded-row reference), ivf_kmeans_topk_exact,
+pq_adc_topk_exact, and the broadcast-matrix fast path
+grid_kmeans_cells_fast / grid_assign_subspaces_fast /
+grid_kmeans_codebook_fast. A codebook stays a driver-side numpy matrix
+from training to assignment; ``_argmin_kernel`` is the one
+nearest-centroid argmin, ``_lloyd`` / ``_mean_update`` the one
+truncated-division Lloyd round, ``_assign_from_matrix`` the one
+map-only assignment pass.
 """
 
 from __future__ import annotations
@@ -32,6 +55,16 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int, descending: bool = False) -> DataFrame:
+    """The one ranking step of every top-k search: ``rank`` =
+    row_number per query_id ordered by ``score`` (descending for
+    similarities, ascending for distances), ties → smaller neighbor_id;
+    keeps rank <= k."""
+    order = F.desc(score) if descending else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def brute_force_topk(
@@ -61,11 +94,7 @@ def brute_force_topk(
             cosine(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, "cosine_sim", k, descending=True)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -98,15 +127,53 @@ def _bucket_expr(vec_col: str, dim: int, n_planes: int, seed: int):
     return bucket
 
 
-def sign_lsh_buckets(
+def _lsh_buckets(
     df: DataFrame,
+    keep: dict[str, str],
+    vec_col: str,
     dim: int,
-    n_planes: int = 12,
-    vec_col: str = "embedding",
-    seed: int = 42,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+    probe_radius: int = 0,
 ) -> DataFrame:
-    """Append a ``bucket`` column = sign-bit key over n_planes hyperplanes."""
-    return df.withColumn("bucket", _bucket_expr(vec_col, dim, n_planes, seed))
+    """(*keep, bucket): one row per (vector, table, probe mask). ``keep``
+    maps output names to input columns. Table t's key is the sign-bit
+    bucket over planes seeded ``seed + 7919·t``, with t packed above the
+    n_planes bits so tables never cross-match. Probing XORs every mask
+    of Hamming weight <= ``probe_radius`` into the key.
+
+    ONE bucket expression per table (the hyperplane dot products are
+    n_planes×dim literal trees — building a column per probe mask would
+    copy that tree masks× times and blow up codegen), then the probe
+    masks XOR the computed bucket COLUMN after the explode. Masks are
+    < 2^n_planes so they never touch the packed table id."""
+    from itertools import combinations
+
+    raw = df.select(
+        *[F.col(src).alias(name) for name, src in keep.items()],
+        F.explode(
+            F.array(*[
+                _bucket_expr(vec_col, dim, n_planes, seed + 7919 * t)
+                .bitwiseOR(F.lit(t << n_planes).cast("long"))
+                for t in range(n_tables)
+            ])
+        ).alias("__raw"),
+    )
+    masks = [0]
+    for r in range(1, probe_radius + 1):
+        masks.extend(
+            sum(1 << i for i in bits) for bits in combinations(range(n_planes), r)
+        )
+    if masks == [0]:
+        return raw.withColumnRenamed("__raw", "bucket")
+    mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
+    return raw.select(
+        *keep,
+        F.explode(
+            F.transform(mask_arr, lambda m: F.col("__raw").bitwiseXOR(m))
+        ).alias("bucket"),
+    )
 
 
 def lsh_topk(
@@ -136,53 +203,21 @@ def lsh_topk(
     Cost is a bucket equi-join instead of |Q|×n; the corpus side is
     bucketed once per table (one narrow projection, no shuffle — the
     join key includes the table id so tables never cross-match)."""
-    from itertools import combinations
-
-    masks = [0]
-    for r in range(1, probe_radius + 1):
-        masks.extend(
-            sum(1 << i for i in bits) for bits in combinations(range(n_planes), r)
-        )
-
-    def with_buckets(df, out_id, out_vec, probe):
-        # ONE bucket expression per table (the hyperplane dot products are
-        # n_planes×dim literal trees — building a column per probe mask
-        # would copy that tree masks× times and blow up codegen), then the
-        # probe masks XOR the computed bucket COLUMN after the explode.
-        # Masks are < 2^n_planes so they never touch the packed table id
-        # in the high bits.
-        raw = df.select(
-            F.col(id_col).alias(out_id),
-            F.col(vec_col).alias(out_vec),
-            F.explode(
-                F.array(*[
-                    _bucket_expr(vec_col, dim, n_planes, seed + 7919 * t)
-                    .bitwiseOR(F.lit(t << n_planes).cast("long"))
-                    for t in range(n_tables)
-                ])
-            ).alias("__raw"),
-        )
-        if not probe or masks == [0]:
-            return raw.withColumnRenamed("__raw", "bucket")
-        mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
-        return raw.select(
-            out_id,
-            out_vec,
-            F.explode(
-                F.transform(mask_arr, lambda m: F.col("__raw").bitwiseXOR(m))
-            ).alias("bucket"),
-        )
-
-    cb = with_buckets(corpus, "neighbor_id", "__cv", probe=False)
-    qb = with_buckets(queries, "query_id", "__qv", probe=True)
+    cb = _lsh_buckets(
+        corpus, {"neighbor_id": id_col, "__cv": vec_col}, vec_col,
+        dim, n_planes, n_tables, seed,
+    )
+    qb = _lsh_buckets(
+        queries, {"query_id": id_col, "__qv": vec_col}, vec_col,
+        dim, n_planes, n_tables, seed, probe_radius,
+    )
     scored = (
         cb.join(F.broadcast(qb), on="bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("cosine_sim"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, "cosine_sim", k, descending=True)
 
 
 def brute_force_topk_vectorized(
@@ -203,7 +238,6 @@ def brute_force_topk_vectorized(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     if len(queries_pdf) == 0:
         return (
@@ -237,37 +271,42 @@ def brute_force_topk_vectorized(
         .mapInPandas(score, schema=out_schema)
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, "cosine_sim", k, descending=True)
 
 
-def ivf_assign(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding", metric: str = "cosine") -> DataFrame:
-    """Assign every vector to its best centroid (max cosine — or min
-    squared L2 with ``metric='l2'``, the proper metric for PQ subspace
-    quantizers where slices are not direction-normalized; ties → min
-    centroid id). Centroids broadcast against the corpus (codegen'd
-    scoring, no literal mega-expression — a C·dim literal argmax falls
-    out of whole-stage codegen and runs interpreted), then a max_by
-    aggregate picks the cell: partial aggregation collapses each vector's
-    C scored rows map-side, so the exchange carries n rows — unlike a
-    row_number window, which would sort-shuffle all n×C."""
-    c = centroids.select(
-        F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv")
-    )
+def _scored_cells(
+    df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, metric: str
+) -> DataFrame:
+    """Every vector scored against every broadcast centroid: (id, vec,
+    __cid, __sim), __sim = cosine, or −squared L2 with ``metric='l2'``
+    (the proper metric for PQ subspace quantizers, whose slices are not
+    direction-normalized) — higher is nearer either way. Codegen'd
+    scoring against a broadcast frame, no literal mega-expression (a
+    C·dim literal argmax falls out of whole-stage codegen and runs
+    interpreted)."""
+    c = centroids.select(F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv"))
     if metric == "cosine":
         sim = cosine(df[vec_col], F.col("__cv"))
     elif metric == "l2":
         sim = -_l2sq(df[vec_col], F.col("__cv"))
     else:
         raise ValueError(f"unknown metric {metric!r}; use 'cosine' or 'l2'")
-    order = F.struct(F.col("__sim").alias("s"), (-F.col("__cid")).alias("nc"))
     return (
         _spread_if_narrow(df).join(F.broadcast(c))
-        .select(
-            df[id_col], df[vec_col],
-            F.col("__cid"), sim.alias("__sim"),
-        )
+        .select(df[id_col], df[vec_col], F.col("__cid"), sim.alias("__sim"))
+    )
+
+
+def ivf_assign(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
+               vec_col: str = "embedding", metric: str = "cosine") -> DataFrame:
+    """Assign every vector to its best centroid (max cosine — or min
+    squared L2 with ``metric='l2'``; ties → min centroid id). A max_by
+    aggregate picks the cell: partial aggregation collapses each
+    vector's C scored rows map-side, so the exchange carries n rows —
+    unlike a row_number window, which would sort-shuffle all n×C."""
+    order = F.struct(F.col("__sim").alias("s"), (-F.col("__cid")).alias("nc"))
+    return (
+        _scored_cells(df, centroids, id_col, vec_col, metric)
         .groupBy(id_col)
         .agg(
             F.max_by(F.col("__cid"), order).alias("cell"),
@@ -291,18 +330,11 @@ def _ivf_assign_multi(
     of only the argmax cell. Same broadcast shape as ivf_assign; the
     row_number window partitions by vector over |C| rows each, so the
     sort is per-vector-tiny at any corpus size. Returns one row per
-    (vector, probed cell): (id, vec, cell)."""
-    c = centroids.select(F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv"))
-    if metric == "cosine":
-        sim = cosine(df[vec_col], F.col("__cv"))
-    elif metric == "l2":
-        sim = -_l2sq(df[vec_col], F.col("__cv"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}; use 'cosine' or 'l2'")
-    scored = (
-        _spread_if_narrow(df).join(F.broadcast(c))
-        .select(df[id_col], df[vec_col], F.col("__cid"), sim.alias("__sim"))
-    )
+    (vector, probed cell): (id, vec, cell). nprobe=1 is ivf_assign's
+    single-cell pass (the oracle-pinned classic probe)."""
+    if nprobe == 1:
+        return ivf_assign(df, centroids, id_col, vec_col, metric)
+    scored = _scored_cells(df, centroids, id_col, vec_col, metric)
     w = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("__cid"))
     return (
         scored.withColumn("__r", F.row_number().over(w))
@@ -336,11 +368,7 @@ def ivf_topk(
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     corpus_cells = ivf_assign(corpus, centroids, id_col, vec_col)
-    if nprobe == 1:
-        query_cells = ivf_assign(queries, centroids, id_col, vec_col)
-    else:
-        query_cells = _ivf_assign_multi(queries, centroids, nprobe, id_col, vec_col)
-    query_cells = query_cells.select(
+    query_cells = _ivf_assign_multi(queries, centroids, nprobe, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "cell"
     )
     cands = (
@@ -352,8 +380,34 @@ def ivf_topk(
         .select("query_id", "neighbor_id",
                 cosine(F.col("__qv"), F.col("__cv")).alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(cands, "cosine_sim", k, descending=True)
+
+
+def _decimal_means(assigned: DataFrame, keys: list[str], vec: str, out: str) -> DataFrame:
+    """The float tier's centroid update: per ``keys`` group, the
+    component-wise mean of ``vec`` as ``out`` array<float>. posexplode
+    to (keys, pos, val) and aggregate — partial (map-side) aggregation
+    collapses n×dim rows to groups×dim per partition BEFORE the
+    exchange. Sums accumulate in DECIMAL(38,9), so the means are
+    partitioning-independent."""
+    dim_means = (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            (
+                F.sum(F.col("val").cast("double").cast("decimal(38,9)"))
+                / F.count(F.lit(1))
+            )
+            .cast("float")
+            .alias("mean")
+        )
+    )
+    return dim_means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "mean"))),
+            lambda s: s["mean"],
+        ).alias(out)
+    )
 
 
 def kmeans_centroids(
@@ -372,17 +426,14 @@ def kmeans_centroids(
     Scale shape per iteration (the 100 TB story):
     - assignment reuses ivf_assign — centroids broadcast, max_by partial
       aggregate, the corpus never shuffles more than its n rows;
-    - the mean update posexplodes to (cell, pos, val) and aggregates —
-      partial (map-side) aggregation collapses n×dim rows to k×dim per
-      partition BEFORE the exchange, so the shuffle carries k×dim×
-      partitions rows, not the corpus;
+    - the mean update is _decimal_means — its shuffle carries
+      k×dim×partitions rows, not the corpus;
     - centroid frames are k×dim (tiny) and localCheckpointed each round
       (lineage cut; blocks freed by the ContextCleaner on dereference).
 
     Determinism: initialization picks the k md5-smallest ids (no
-    random()), and mean sums accumulate in DECIMAL(38,9) so results are
-    partitioning-independent — two runs on the same data give identical
-    centroids. Empty cells (possible when k exceeds the number of
+    random()), and the decimal-grid means are partitioning-independent
+    — two runs on the same data give identical centroids. Empty cells (possible when k exceeds the number of
     distinct points) simply drop out, returning fewer than k centroids —
     callers get the IVF behavior of "every remaining cell is non-empty".
 
@@ -420,26 +471,8 @@ def kmeans_centroids(
             vec_col,
             metric=metric,
         )
-        dim_means = (
-            assigned.select("cell", F.posexplode(vec_col).alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("double").cast("decimal(38,9)"))
-                    / F.count(F.lit(1))
-                )
-                .cast("float")
-                .alias("mean")
-            )
-        )
         centroids = (
-            dim_means.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mean"))),
-                    lambda s: s["mean"],
-                ).alias(vec_col)
-            )
+            _decimal_means(assigned, ["cell"], vec_col, vec_col)
             .select(F.col("cell").alias(id_col), vec_col)
             .localCheckpoint(eager=True)
         )
@@ -474,7 +507,6 @@ def _l2sq(a, b):
     )
 
 
-
 def _pq_geometry(codebooks: DataFrame) -> tuple[int, int]:
     """(m subspaces, d components per subspace) read from the codebook
     frame itself — the single source of truth every PQ consumer
@@ -495,6 +527,24 @@ def _check_pq_dims(df: DataFrame, vec_col: str, m: int, d: int) -> None:
             f"vector dim {dim} does not match codebook geometry "
             f"m={m} × d={d} (= {m * d})"
         )
+
+
+def _subspace_slices(
+    df: DataFrame, keep: dict[str, str], vec_col: str, m: int, d: int, out: str
+) -> DataFrame:
+    """(*keep, subspace int, out): one row per contiguous d-component
+    slice j < m of ``vec_col`` — the one subspace split of PQ training,
+    encoding and query LUTs. ``keep`` maps output names to input
+    columns."""
+    return df.select(
+        *[F.col(src).alias(name) for name, src in keep.items()],
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                lambda j: F.slice(F.col(vec_col), j * F.lit(d) + 1, d),
+            )
+        ).alias("subspace", out),
+    ).select(*keep, F.col("subspace").cast("int").alias("subspace"), out)
 
 
 def pq_codebooks(
@@ -523,15 +573,7 @@ def pq_codebooks(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     d = dim // m
-    slices = df.select(
-        F.col(id_col).alias("__pid"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda j: F.slice(F.col(vec_col), j * F.lit(d) + 1, d),
-            )
-        ).alias("subspace", "__sv"),
-    ).select("__pid", F.col("subspace").cast("int").alias("subspace"), "__sv")
+    slices = _subspace_slices(df, {"__pid": id_col}, vec_col, m, d, "__sv")
 
     pool = slices.groupBy("subspace", "__sv").agg(F.min("__pid").alias("__pid"))
     sw = Window.partitionBy("subspace").orderBy(
@@ -557,28 +599,9 @@ def pq_codebooks(
             F.max_by(F.col("code"), order).alias("code"),
             F.max_by(F.col("__sv"), order).alias("__sv"),
         )
-        dim_means = (
-            assigned.select("subspace", "code", F.posexplode("__sv").alias("pos", "val"))
-            .groupBy("subspace", "code", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("double").cast("decimal(38,9)"))
-                    / F.count(F.lit(1))
-                )
-                .cast("float")
-                .alias("mean")
-            )
-        )
-        centroids = (
-            dim_means.groupBy("subspace", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mean"))),
-                    lambda s: s["mean"],
-                ).alias("codeword")
-            )
-            .localCheckpoint(eager=True)
-        )
+        centroids = _decimal_means(
+            assigned, ["subspace", "code"], "__sv", "codeword"
+        ).localCheckpoint(eager=True)
     return centroids
 
 
@@ -600,15 +623,7 @@ def pq_encode(
     duplicate codebook aggregate + dim probe jobs)."""
     m, d = geometry if geometry is not None else _pq_geometry(codebooks)
     _check_pq_dims(df, vec_col, m, d)
-    sub = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda j: F.slice(F.col(vec_col), j * F.lit(d) + 1, d),
-            )
-        ).alias("subspace", "__sv"),
-    ).select(F.col(id_col), F.col("subspace").cast("int").alias("subspace"), "__sv")
+    sub = _subspace_slices(df, {id_col: id_col}, vec_col, m, d, "__sv")
     order = F.struct((-F.col("__d2")).alias("nd"), (-F.col("code")).alias("nc"))
     scored = sub.join(F.broadcast(codebooks), on="subspace").select(
         id_col, "subspace", "code", _l2sq(F.col("__sv"), F.col("codeword")).alias("__d2")
@@ -636,20 +651,8 @@ def _pq_query_lut(
     """Per-query ADC lookup table: (query_id, [carry...], subspace, code,
     __d2) — Q·m·k rows, built by one broadcast join against the
     codebooks. Shared by the flat and IVF-composed search paths."""
-    qsub = queries.select(
-        F.col(id_col).alias("query_id"),
-        *[F.col(c) for c in carry],
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda j: F.slice(F.col(vec_col), j * F.lit(d) + 1, d),
-            )
-        ).alias("subspace", "__qv"),
-    ).select(
-        "query_id",
-        *carry,
-        F.col("subspace").cast("int").alias("subspace"),
-        "__qv",
+    qsub = _subspace_slices(
+        queries, {"query_id": id_col, **{c: c for c in carry}}, vec_col, m, d, "__qv"
     )
     return qsub.join(F.broadcast(codebooks), on="subspace").select(
         "query_id", *carry, "subspace", "code",
@@ -657,20 +660,28 @@ def _pq_query_lut(
     )
 
 
-def _adc_rank(codes_exploded: DataFrame, lut: DataFrame, join_keys: list, k: int) -> DataFrame:
-    """Shared ADC body: broadcast the LUT against the exploded corpus
-    codes, sum per (query, neighbor) — partial-aggregated map-side, so
-    the coded corpus never shuffles before the distance sum — then the
-    per-query top-k. One definition serves pq_topk_adc and ivfpq_topk,
-    so a fix applies to both paths."""
+def _adc_rank(coded: DataFrame, lut: DataFrame, id_col: str, carry: tuple, k: int) -> DataFrame:
+    """Shared ADC body: explode the coded corpus (id, [carry...], codes)
+    to one row per subspace code, broadcast the LUT against it on
+    ([carry...], subspace, code), sum per (query, neighbor) —
+    partial-aggregated map-side, so the coded corpus never shuffles
+    before the distance sum — then the per-query top-k. One definition
+    serves pq_topk_adc and ivfpq_topk, so a fix applies to both
+    paths."""
+    codes = coded.select(
+        F.col(id_col).alias("neighbor_id"),
+        *carry,
+        F.posexplode("codes").alias("subspace", "code"),
+    ).select(
+        "neighbor_id", *carry, F.col("subspace").cast("int").alias("subspace"), "code"
+    )
     dists = (
-        codes_exploded.join(F.broadcast(lut), on=join_keys)
+        codes.join(F.broadcast(lut), on=[*carry, "subspace", "code"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__d2").alias("adc_dist"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return dists.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(dists, "adc_dist", k)
 
 
 def pq_topk_adc(
@@ -688,11 +699,7 @@ def pq_topk_adc(
     m, d = _pq_geometry(codebooks)
     _check_pq_dims(queries, vec_col, m, d)
     lut = _pq_query_lut(queries, codebooks, m, d, id_col, vec_col)
-    codes = corpus_codes.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode("codes").alias("subspace", "code"),
-    ).select("neighbor_id", F.col("subspace").cast("int").alias("subspace"), "code")
-    return _adc_rank(codes, lut, ["subspace", "code"], k)
+    return _adc_rank(corpus_codes, lut, id_col, (), k)
 
 
 def ivfpq_topk(
@@ -728,25 +735,11 @@ def ivfpq_topk(
     # pq_encode validates the corpus dim itself with the shared geometry
     codes = pq_encode(corpus, codebooks, id_col, vec_col, geometry=(m, d))
     coded_cells = corpus_cells.select(id_col, "cell").join(codes, on=id_col)
-    if nprobe == 1:
-        query_cells = ivf_assign(queries, centroids, id_col, vec_col, metric="l2")
-    else:
-        query_cells = _ivf_assign_multi(
-            queries, centroids, nprobe, id_col, vec_col, metric="l2"
-        )
-    query_cells = query_cells.select(
-        F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col), "cell"
+    query_cells = _ivf_assign_multi(
+        queries, centroids, nprobe, id_col, vec_col, metric="l2"
     )
     lut = _pq_query_lut(query_cells, codebooks, m, d, id_col, vec_col, carry=("cell",))
-    cell_codes = coded_cells.select(
-        F.col(id_col).alias("neighbor_id"),
-        "cell",
-        F.posexplode("codes").alias("subspace", "code"),
-    ).select(
-        "neighbor_id", "cell",
-        F.col("subspace").cast("int").alias("subspace"), "code",
-    )
-    return _adc_rank(cell_codes, lut, ["cell", "subspace", "code"], k)
+    return _adc_rank(coded_cells, lut, id_col, ("cell",), k)
 
 
 def jl_project(
@@ -885,48 +878,65 @@ def grid_seeds(df: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
     )
 
 
-def grid_assign(qdims: DataFrame, cent: DataFrame, subdims: int) -> DataFrame:
-    """Per-subspace nearest-centroid assignment: argmin over cells of the
-    exact integer L2², ties → min cell. Returns (vec_id, sub, cell).
-    Centroids broadcast; the max_by-style partial aggregate collapses the
-    n×cells scored rows map-side, so the exchange carries n×m rows."""
-    d = (
+def _grid_sub_dists(qdims: DataFrame, cent: DataFrame, subdims: int) -> DataFrame:
+    """(vec_id, sub, cell, d): exact integer L2² between each vector's
+    subspace slice (sub = dim div subdims) and every broadcast
+    centroid's — grid_assign's scores and pq_adc_topk_exact's ADC LUT."""
+    return (
         qdims.join(F.broadcast(cent), "dim")
         .groupBy("vec_id", F.expr(f"dim div {subdims}").alias("sub"), "cell")
         .agg(
             F.sum((F.col("qv") - F.col("cv")) * (F.col("qv") - F.col("cv"))).alias("d")
         )
     )
-    return d.groupBy("vec_id", "sub").agg(
+
+
+def grid_assign(qdims: DataFrame, cent: DataFrame, subdims: int) -> DataFrame:
+    """Per-subspace nearest-centroid assignment: argmin over cells of the
+    exact integer L2², ties → min cell. Returns (vec_id, sub, cell).
+    Centroids broadcast; the max_by-style partial aggregate collapses the
+    n×cells scored rows map-side, so the exchange carries n×m rows."""
+    return _grid_sub_dists(qdims, cent, subdims).groupBy("vec_id", "sub").agg(
         F.min_by("cell", F.struct("d", "cell")).alias("cell")
     )
 
 
-def grid_kmeans_codebook(
-    qdims: DataFrame, seeds: DataFrame, iters: int, subdims: int
-) -> DataFrame:
-    """Lloyd's loop on the integer grid: assignment via grid_assign, mean
-    update via truncated integer division (sum div count — Spark `div`
-    == DuckDB `//`). With subdims < dim this learns PER-SUBSPACE
-    codebooks sharing cell ids (the PQ layout); with _WHOLE_VEC it is
-    plain k-means. A cell that loses all members in some subspace drops
-    that subspace's rows — both engines inner-join it away identically.
-    Returns the centroid dim table (cell, dim, cv)."""
+def _grid_lloyd(qdims: DataFrame, seeds: DataFrame, iters: int, subdims: int, assign) -> DataFrame:
+    """The grid Lloyd's loop over a (cell, dim, cv) centroid table:
+    seeds' vectors start it, then each round runs ``assign(cent)`` ->
+    (vec_id, sub, cell) and the truncated integer-division mean update
+    (sum div count — Spark `div` == DuckDB `//`) over the members' dims
+    in that subspace. A cell that loses all members in some subspace
+    drops that subspace's rows — both engines inner-join it away
+    identically."""
     cent = (
         seeds.join(qdims, "vec_id")
         .select("cell", "dim", F.col("qv").alias("cv"))
         .localCheckpoint(eager=True)
     )
     for _ in range(iters):
-        best = grid_assign(qdims, cent, subdims)
         cent = (
-            best.join(qdims, "vec_id")
+            assign(cent)
+            .join(qdims, "vec_id")
             .filter(F.expr(f"dim div {subdims}") == F.col("sub"))
             .groupBy("cell", "dim")
             .agg(F.expr("sum(qv) div count(1)").alias("cv"))
             .localCheckpoint(eager=True)
         )
     return cent
+
+
+def grid_kmeans_codebook(
+    qdims: DataFrame, seeds: DataFrame, iters: int, subdims: int
+) -> DataFrame:
+    """Lloyd's loop on the integer grid with the exploded-row
+    grid_assign — the reference the SQL oracles replay step for step.
+    With subdims < dim this learns PER-SUBSPACE codebooks sharing cell
+    ids (the PQ layout); with _WHOLE_VEC it is plain k-means. Returns
+    the centroid dim table (cell, dim, cv)."""
+    return _grid_lloyd(
+        qdims, seeds, iters, subdims, lambda cent: grid_assign(qdims, cent, subdims)
+    )
 
 
 def ivf_kmeans_topk_exact(
@@ -948,19 +958,16 @@ def ivf_kmeans_topk_exact(
     # exploded-row grid path, equivalence-tested) — the n·dim·k
     # exchange is the piece that stops scaling once n or k grows
     carr = quantize_arr(corpus, id_col, vec_col, scale, out="qarr")
-    corpus_cells, cent = grid_kmeans_cells_fast(carr, seeds, iters)
-    query_cells = grid_assign_whole_fast(
-        quantize_arr(queries, id_col, vec_col, scale, out="qarr"), cent
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    carr = quantize_arr(corpus, id_col, vec_col, scale, out="__cq").join(
-        corpus_cells, "vec_id"
+    qarr = quantize_arr(queries, id_col, vec_col, scale, out="qarr")
+    corpus_cells, cells_arr, cmat = grid_kmeans_cells_fast(carr, seeds, iters)
+    query_cells = _assign_from_matrix(qarr, cells_arr, cmat)
+    q = qarr.join(query_cells, "vec_id").select(
+        F.col("vec_id").alias("query_id"), F.col("qarr").alias("__qq"), "cell"
     )
-    qarr = quantize_arr(queries, id_col, vec_col, scale, out="__qq").join(
-        query_cells.withColumnRenamed("query_id", "vec_id"), "vec_id"
-    ).select(F.col("vec_id").alias("query_id"), "__qq", "cell")
     cand = (
-        carr.select(F.col("vec_id").alias("neighbor_id"), "__cq", "cell")
-        .join(F.broadcast(qarr), "cell")
+        carr.join(corpus_cells, "vec_id")
+        .select(F.col("vec_id").alias("neighbor_id"), F.col("qarr").alias("__cq"), "cell")
+        .join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -968,8 +975,7 @@ def ivf_kmeans_topk_exact(
             _l2sq_arr(F.col("__qq"), F.col("__cq")).alias("l2sq"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("l2sq", "neighbor_id")
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(cand, "l2sq", k)
 
 
 def pq_adc_topk_exact(
@@ -1004,18 +1010,8 @@ def pq_adc_topk_exact(
     carr = quantize_arr(corpus, id_col, vec_col, scale, out="qarr")
     cb = grid_kmeans_codebook_fast(cd, carr, seeds, iters, subdims)
     codes = grid_assign_subspaces_fast(carr, cb, subdims)  # (vec_id, sub, cell)
-    lut = (
-        qd.join(F.broadcast(cb), "dim")
-        .groupBy(
-            F.col("vec_id").alias("query_id"),
-            F.expr(f"dim div {subdims}").alias("sub"),
-            "cell",
-        )
-        .agg(
-            F.sum((F.col("qv") - F.col("cv")) * (F.col("qv") - F.col("cv"))).alias(
-                "part"
-            )
-        )
+    lut = _grid_sub_dists(qd, cb, subdims).select(
+        F.col("vec_id").alias("query_id"), "sub", "cell", F.col("d").alias("part")
     )
     adc = (
         codes.select(F.col("vec_id").alias("neighbor_id"), "sub", "cell")
@@ -1024,39 +1020,13 @@ def pq_adc_topk_exact(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("part").alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    return adc.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def grid_assign_whole_fast(qarr: DataFrame, cent: DataFrame) -> DataFrame:
-    """Whole-vector nearest-centroid assignment WITHOUT the row explosion:
-    grid_assign generates n·dim·k rows through a shuffle (fine at the
-    oracle tier's k=16, measured 23.7× for 10× data once k scales with n
-    — SCALE_PROBE_corpus_sf1.json), and a pure-Column argmin over a
-    broadcast array constant evaluates higher-order lambdas per element
-    (measured just as slow at n·k·dim = 205M element visits). This path
-    is the production shape: the k×dim centroid matrix is driver-scale
-    METADATA (k=100k × dim=64 ≈ 51 MB — what Spark MLlib's KMeans
-    broadcasts every iteration), collected once and closed over by an
-    Arrow-batched pandas_udf whose body is one int64 matmul —
-    ‖q−c‖² = ‖q‖² + ‖c‖² − 2·q·cᵀ, exact in int64 (|qv| ≤ 1e6,
-    dim 64 ⇒ every term < 2⁶³), argmin per batch. numpy argmin returns
-    the FIRST minimum and rows are sorted by cell, so ties break to the
-    smallest cell — bit-identical to grid_assign's min_by
-    struct("d","cell"). n rows stay n rows, zero shuffle, zero
-    row-at-a-time Python. Returns (vec_id, cell).
-
-    qarr: (vec_id, qarr array<long>) from quantize_arr(out="qarr").
-    cent: (cell, dim, cv) — the grid_kmeans_codebook output shape.
-    """
-    cells_arr, cmat = _centroid_matrix(cent)
-    return _assign_from_matrix(qarr, cells_arr, cmat)
+    return _rank_topk(adc, "adc", k)
 
 
 def _centroid_matrix(cent: DataFrame):
-    """Collect a (cell, dim, cv) centroid table into driver metadata:
-    (cells ascending int64[k], k×dim int64 matrix). The collect is
-    bounded by k×dim — what MLlib's KMeans broadcasts every iteration."""
+    """Collect a (cell, dim, cv) centroid table — the grid_kmeans_codebook
+    output — into the driver-matrix form grid_kmeans_cells_fast returns:
+    (cells ascending int64[k], k×dim int64 matrix)."""
     import numpy as np
 
     rows = (
@@ -1078,8 +1048,10 @@ KMEANS_LOCAL_MAX = 32768
 
 
 def _argmin_kernel(cmat):
-    """Positional nearest-centroid argmin over a driver-side k×dim int64
+    """The one nearest-centroid argmin over a driver-side k×dim int64
     matrix; returns fn(q: b×dim int64) -> positions into cmat's rows.
+    ‖q−c‖² = ‖q‖² + ‖c‖² − 2·q·cᵀ, exact in int64 (|qv| ≤ 1e6, dim 64
+    ⇒ every term < 2⁶³).
 
     BLAS tier: numpy's int64 matmul has NO BLAS kernel (generic loops);
     at production k∝n it became the dominant super-linear term (d58
@@ -1115,9 +1087,11 @@ def _argmin_kernel(cmat):
 
 
 def _assign_from_matrix(qarr: DataFrame, cells_arr, cmat) -> DataFrame:
-    """(vec_id, cell) nearest-centroid assignment: n rows stay n rows,
-    zero shuffle, zero row-at-a-time Python (Arrow-batched mapInPandas
-    closing over the k×dim driver matrix)."""
+    """(vec_id, cell) nearest-centroid assignment of a (vec_id, qarr)
+    frame against a driver matrix: n rows stay n rows, zero shuffle,
+    zero row-at-a-time Python (Arrow-batched mapInPandas closing over
+    the k×dim matrix — driver-scale METADATA, k=100k × dim=64 ≈ 51 MB,
+    what Spark MLlib's KMeans broadcasts every iteration)."""
     import numpy as np
     import pandas as pd
 
@@ -1137,30 +1111,64 @@ def _assign_from_matrix(qarr: DataFrame, cells_arr, cmat) -> DataFrame:
     )
 
 
-def grid_kmeans_cells_fast(
-    qarr: DataFrame, seeds: DataFrame, iters: int
-) -> tuple[DataFrame, DataFrame]:
+def _mean_update(sums, counts, ids):
+    """The grid mean update on driver arrays: cells with no members drop
+    (like the SQL groupBy), the rest move to sum div count, truncated
+    toward zero like SQL `div` (numpy's // floors, so it runs on |sum|
+    and takes the sign back). Returns (next k′×dim matrix, surviving
+    ids)."""
+    import numpy as np
+
+    nz = counts > 0
+    s, c = sums[nz], counts[nz][:, None]
+    return np.sign(s) * (np.abs(s) // c), ids[nz]
+
+
+def _lloyd(q, cmat, ids, iters):
+    """``iters`` grid Lloyd's rounds over an in-memory b×dim int64 batch:
+    first-min argmin assignment, int64 sums and counts (exact and
+    order-free), then _mean_update. ``ids`` labels cmat's rows and is
+    filtered with them. Returns (final matrix, surviving ids)."""
+    import numpy as np
+
+    for _ in range(iters):
+        p = _argmin_kernel(cmat)(q)
+        sums = np.zeros_like(cmat)
+        np.add.at(sums, p, q)
+        cmat, ids = _mean_update(sums, np.bincount(p, minlength=len(ids)), ids)
+    return cmat, ids
+
+
+def grid_kmeans_cells_fast(qarr: DataFrame, seeds: DataFrame, iters: int):
     """Whole-vector Lloyd's with driver-resident centroids — the MLlib
-    KMeans execution shape. Per iteration ONE distributed pass fuses
-    assignment with the mean-update's partial aggregation: each task
-    argmin-assigns its Arrow batches against the broadcast k×dim matrix
-    and emits per-partition (cell, dim, sum, count) partials (≤ k·dim
-    rows per partition — never n·dim), which one tiny shuffle + collect
-    reduces to the next centroid matrix on the driver.
+    KMeans execution shape, bit-identical to grid_kmeans_codebook +
+    grid_assign at _WHOLE_VEC (pinned by test_grid_fast_assignment_*).
 
-    Replaced shape (measured r10: 2.6-3.0 s of d58's 3.0 s at sf0.1 was
-    THIS loop): per iteration an assignment job, an n·dim join+groupBy
-    shuffle, an eager localCheckpoint, and a separate k×dim re-collect —
-    ~6 jobs/iteration of fixed overhead at small scale AND an n·dim
-    shuffle at large scale. Now: 1 job per iteration, shuffle bounded by
-    k·dim·partitions.
+    qarr: (vec_id, qarr array<long>) from quantize_arr(out="qarr").
+    Returns ``(cells, cells_arr, cmat)``: the final assignment
+    (vec_id, cell), and the final codebook as driver metadata —
+    ascending int64 cell ids and the k′×dim int64 centroid matrix
+    (k′ ≤ k: empty cells drop). An empty corpus returns an empty frame,
+    an empty cells_arr and a 0-row cmat.
 
-    Bit-identical semantics (pinned by test_grid_fast_assignment_*):
-    int64 partial sums are exact and order-free; the mean update is the
-    same truncated-toward-zero integer division as SQL's `sum(qv) div
-    count(1)`; empty cells drop; ties argmin-break to the smallest cell.
-    Returns (final cells (vec_id, cell), final centroid table (cell,
-    dim, cv) — rebuilt from the driver matrix, k×dim rows)."""
+    Two tiers with the same arithmetic (_lloyd / _mean_update /
+    _argmin_kernel), chosen by corpus size:
+    - local (≤ KMEANS_LOCAL_MAX rows): each Lloyd's iteration is
+      inherently one Spark job (the next matrix depends on the last),
+      so a small corpus would pay iters+1 jobs of pure scheduling
+      overhead (measured 1.3 s of d58's 1.26 s bench budget at sf0.1).
+      One bounded limit-probe collect fetches the whole input and the
+      loop runs driver-side; above the bound the probe costs one
+      truncated scan;
+    - distributed: per iteration ONE pass fuses assignment with the
+      mean update's partial aggregation — each task argmin-assigns its
+      Arrow batches against the broadcast matrix and emits
+      per-partition (cell, dim, sum, count) partials (≤ k·dim rows per
+      partition, never n·dim), which one tiny shuffle + collect reduces
+      for _mean_update. The exploded-row loop it replaced ran ~6
+      jobs/iteration and an n·dim shuffle.
+    Equivalence of the tiers is pinned by
+    test_grid_fast_local_matches_distributed."""
     import numpy as np
     import pandas as pd
 
@@ -1180,62 +1188,26 @@ def grid_kmeans_cells_fast(
     )
     spark = qarr.sparkSession
     if not seed_rows:
-        # empty corpus: no seeds, no cells — empty frames with the
-        # contract schemas (a 1-D empty np.array would crash the k×dim
-        # unpack below)
         return (
             spark.createDataFrame([], "vec_id bigint, cell bigint"),
-            spark.createDataFrame([], "cell bigint, dim int, cv bigint"),
+            np.empty(0, dtype=np.int64),
+            np.empty((0, 0), dtype=np.int64),
         )
     cells_arr = np.array([r.cell for r in seed_rows], dtype=np.int64)
     cmat = np.array([r.qarr for r in seed_rows], dtype=np.int64)
 
-    # Bounded local tier (optimization r14, guide §1.2): each Lloyd's
-    # iteration is inherently one Spark job (the next centroid matrix
-    # depends on the last), so a small corpus pays iters+1 jobs of pure
-    # scheduling overhead — measured 1.3s of d58's 1.26s bench budget at
-    # sf0.1 (2000 vectors). A limit-probe collect (one bounded job,
-    # ≤ KMEANS_LOCAL_MAX+1 rows regardless of corpus size) fetches small
-    # inputs entirely and runs the SAME numpy kernel driver-side:
-    # int64 partial sums are exact and order-free, the division is the
-    # same truncated-toward-zero, empty cells drop identically, and the
-    # final assignment is the same _argmin_kernel first-min — so the
-    # result is bit-identical to the distributed loop (equivalence
-    # pinned by test_grid_fast_local_matches_distributed). Above the
-    # bound the probe costs one truncated scan and the distributed loop
-    # runs unchanged.
     probe = qarr.select("vec_id", "qarr").limit(KMEANS_LOCAL_MAX + 1).collect()
     if len(probe) <= KMEANS_LOCAL_MAX:
         ids = np.array([r.vec_id for r in probe], dtype=np.int64)
         q = np.array([r.qarr for r in probe], dtype=np.int64)
-        for _ in range(iters):
-            p = _argmin_kernel(cmat)(q)
-            sums = np.zeros_like(cmat)
-            np.add.at(sums, p, q)
-            counts = np.bincount(p, minlength=cmat.shape[0])
-            nz = counts > 0
-            s, c = sums[nz], counts[nz][:, None]
-            cmat = np.sign(s) * (np.abs(s) // c)
-            cells_arr = cells_arr[nz]
+        cmat, cells_arr = _lloyd(q, cmat, cells_arr, iters)
         cells = spark.createDataFrame(
             pd.DataFrame(
                 {"vec_id": ids, "cell": cells_arr[_argmin_kernel(cmat)(q)]}
             ),
             schema="vec_id bigint, cell bigint",
         )
-        cent = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": np.repeat(cells_arr, cmat.shape[1]),
-                    "dim": np.tile(
-                        np.arange(cmat.shape[1], dtype=np.int64), len(cells_arr)
-                    ),
-                    "cv": cmat.ravel(),
-                }
-            ),
-            schema="cell bigint, dim int, cv bigint",
-        )
-        return cells, cent
+        return cells, cells_arr, cmat
 
     for _ in range(iters):
         k, dim = cmat.shape
@@ -1280,39 +1252,21 @@ def grid_kmeans_cells_fast(
         for r in tot:
             s_arr[r.pos, r.dim] = r.s
             c_arr[r.pos] = r.c
-        nz = c_arr > 0  # empty cells drop, like the groupBy they replace
-        s, c = s_arr[nz], c_arr[nz][:, None]
-        # truncated (toward-zero) integer division == SQL `div`,
-        # sign-adjusted for numpy's floor semantics
-        cmat = np.sign(s) * (np.abs(s) // c)
-        cells_arr = cells_arr[nz]
-    cent = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "cell": np.repeat(cells_arr, cmat.shape[1]),
-                "dim": np.tile(
-                    np.arange(cmat.shape[1], dtype=np.int64), len(cells_arr)
-                ),
-                "cv": cmat.ravel(),
-            }
-        ),
-        schema="cell bigint, dim int, cv bigint",
-    )
-    return _assign_from_matrix(qarr, cells_arr, cmat), cent
+        cmat, cells_arr = _mean_update(s_arr, c_arr, cells_arr)
+    return _assign_from_matrix(qarr, cells_arr, cmat), cells_arr, cmat
 
 
 def grid_assign_subspaces_fast(
     qarr: DataFrame, cent: DataFrame, subdims: int
 ) -> DataFrame:
-    """Per-subspace generalization of grid_assign_whole_fast: one
-    broadcast centroid matrix per subspace, each batch computing m
-    exact-int64 matmul argmins. Bit-identical to
-    grid_assign(qdims, cent, subdims): per (cell, sub) the centroid
-    block is either complete or absent (assignment is per-subspace, so
-    a surviving cell has means for every dim of that subspace), and
-    cells are sorted ascending per sub so numpy's first-min argmin
-    reproduces min_by's (d, cell) tie-break. Output rows are n·m —
-    the CODES, not an intermediate — versus grid_assign's n·dim·k
+    """Per-subspace broadcast-matrix assignment: one driver centroid
+    matrix per subspace, each batch running m _argmin_kernel passes.
+    Bit-identical to grid_assign(qdims, cent, subdims): per (cell, sub)
+    the centroid block is either complete or absent (assignment is
+    per-subspace, so a surviving cell has means for every dim of that
+    subspace), and cells are sorted ascending per sub so the first-min
+    argmin reproduces min_by's (d, cell) tie-break. Output rows are n·m
+    — the CODES, not an intermediate — versus grid_assign's n·dim·k
     exchange (41M rows at sf1 for s59's k=32). Returns
     (vec_id, sub, cell)."""
     from collections import defaultdict
@@ -1330,11 +1284,13 @@ def grid_assign_subspaces_fast(
     groups: dict[int, list] = defaultdict(list)
     for r in rows:
         groups[int(r.sub)].append(r)
-    mats = {}
-    for s, rs in groups.items():
-        cells = np.array([r.cell for r in rs], dtype=np.int64)
-        cm = np.array([r.vec for r in rs], dtype=np.int64)  # k_s × subdims
-        mats[s] = (cells, cm, (cm * cm).sum(axis=1))
+    kernels = {
+        s: (
+            np.array([r.cell for r in rs], dtype=np.int64),
+            _argmin_kernel(np.array([r.vec for r in rs], dtype=np.int64)),
+        )
+        for s, rs in groups.items()
+    }
 
     def assign(batches):
         for pdf in batches:
@@ -1342,27 +1298,11 @@ def grid_assign_subspaces_fast(
                 continue
             q = np.stack(pdf["qarr"].to_numpy()).astype(np.int64)  # b×dim
             vids = pdf["vec_id"].to_numpy()
-            m_q = int(np.abs(q).max()) if q.size else 0
             out_v, out_s, out_c = [], [], []
-            for s, (cells, cm, c_sq) in mats.items():
-                qs = q[:, s * subdims : (s + 1) * subdims]
-                # same float64-dgemm exactness tier as
-                # grid_assign_whole_fast (integer-valued float64 sums are
-                # exact in any order while 4·subdims·M² < 2^53); the
-                # subspace bound is even looser since subdims ≤ dim
-                m = max(m_q, int(np.abs(cm).max()) if cm.size else 0)
-                if 4 * subdims * m * m < 2**53:
-                    qf, cf = qs.astype(np.float64), cm.astype(np.float64)
-                    d = (
-                        (qf * qf).sum(axis=1)[:, None]
-                        + c_sq.astype(np.float64)[None, :]
-                        - 2.0 * (qf @ cf.T)
-                    )
-                else:  # pragma: no cover — beyond any GRID_SCALE geometry
-                    d = (qs * qs).sum(axis=1)[:, None] + c_sq[None, :] - 2 * (qs @ cm.T)
+            for s, (cells, pos) in kernels.items():
                 out_v.append(vids)
                 out_s.append(np.full(len(vids), s, dtype=np.int64))
-                out_c.append(cells[d.argmin(axis=1)])
+                out_c.append(cells[pos(q[:, s * subdims : (s + 1) * subdims])])
             yield pd.DataFrame(
                 {
                     "vec_id": np.concatenate(out_v),
@@ -1379,24 +1319,12 @@ def grid_assign_subspaces_fast(
 def grid_kmeans_codebook_fast(
     qdims: DataFrame, qarr: DataFrame, seeds: DataFrame, iters: int, subdims: int
 ) -> DataFrame:
-    """grid_kmeans_codebook with the broadcast-matrix assignment inside
-    the Lloyd's loop (the n·dim·k exchange was s59's sf1 bottleneck:
-    24.9 s, dominated by two assignment rounds). Mean update is the
-    identical n·dim partial agg — same truncated integer division, same
-    (cell, dim) table out. Pinned bit-identical by
-    test_grid_subspace_fast_matches_slow."""
-    cent = (
-        seeds.join(qdims, "vec_id")
-        .select("cell", "dim", F.col("qv").alias("cv"))
-        .localCheckpoint(eager=True)
+    """grid_kmeans_codebook with the broadcast-matrix assignment
+    (grid_assign_subspaces_fast) inside the Lloyd's loop — the n·dim·k
+    exchange was s59's sf1 bottleneck: 24.9 s, dominated by two
+    assignment rounds. Same mean update, same (cell, dim, cv) table out;
+    pinned bit-identical by test_grid_subspace_fast_matches_slow."""
+    return _grid_lloyd(
+        qdims, seeds, iters, subdims,
+        lambda cent: grid_assign_subspaces_fast(qarr, cent, subdims),
     )
-    for _ in range(iters):
-        best = grid_assign_subspaces_fast(qarr, cent, subdims)
-        cent = (
-            best.join(qdims, "vec_id")
-            .filter(F.expr(f"dim div {subdims}") == F.col("sub"))
-            .groupBy("cell", "dim")
-            .agg(F.expr("sum(qv) div count(1)").alias("cv"))
-            .localCheckpoint(eager=True)
-        )
-    return cent

@@ -766,7 +766,6 @@ def _st91_run(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from pymongraph_spark.operators.similarity import (
         GRID_SCALE,
         _assign_from_matrix,
-        _centroid_matrix,
         grid_kmeans_cells_fast,
         grid_seeds,
         quantize_arr,
@@ -777,8 +776,9 @@ def _st91_run(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
         # rounds), trained once on the standing corpus; the stream only
         # ever does map-only assignment against its k×dim matrix
         qa = quantize_arr(emb, "vec_id", "embedding", GRID_SCALE, out="qarr")
-        _, cent = grid_kmeans_cells_fast(qa, grid_seeds(emb, 16, "vec_id"), 2)
-        cells_arr, cmat = _centroid_matrix(cent)
+        _, cells_arr, cmat = grid_kmeans_cells_fast(
+            qa, grid_seeds(emb, 16, "vec_id"), 2
+        )
         return lambda qb: _assign_from_matrix(qb, cells_arr, cmat)
 
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
@@ -1439,13 +1439,10 @@ def _stream_neardup_run(
         generations by cell at fold time would sharpen that pruning if
         splits ever dominate."""
         import json as _json
-        import math as _math  # noqa: F401 — ceil via -(-a // b)
 
         import numpy as np
 
         from pymongraph_spark.operators.similarity import (
-            _assign_from_matrix,
-            _centroid_matrix,
             grid_kmeans_cells_fast,
             grid_seeds,
         )
@@ -1461,13 +1458,12 @@ def _stream_neardup_run(
             _SPLIT_STRIDE - 1, max(2, -(-n_fam // max(1, occupancy_target)))
         )
         qa = fam.select("vec_id", "qarr")
-        _, cent = grid_kmeans_cells_fast(
+        sub_cells, scells, smat = grid_kmeans_cells_fast(
             qa, grid_seeds(fam, k_split, "vec_id"), 2
         )
-        scells, smat = _centroid_matrix(cent)
         rekeyed = (
             fam.drop("cell")
-            .join(_assign_from_matrix(qa, scells, smat), "vec_id")
+            .join(sub_cells, "vec_id")
             .select(
                 "vec_id",
                 "qarr",
@@ -2003,7 +1999,6 @@ def _st96_make_undersized_assign(emb: DataFrame):
     from pymongraph_spark.operators.similarity import (
         GRID_SCALE,
         _assign_from_matrix,
-        _centroid_matrix,
         grid_kmeans_cells_fast,
         grid_seeds,
         quantize_arr,
@@ -2011,10 +2006,9 @@ def _st96_make_undersized_assign(emb: DataFrame):
 
     wave0 = emb.filter(F.col("vec_id") % 4 == 0)
     qa = quantize_arr(wave0, "vec_id", "embedding", GRID_SCALE, out="qarr")
-    _, cent = grid_kmeans_cells_fast(
+    _, cells_arr, cmat = grid_kmeans_cells_fast(
         qa, grid_seeds(wave0, _ST96_K_UNDERSIZED, "vec_id"), 2
     )
-    cells_arr, cmat = _centroid_matrix(cent)
     return lambda qb: _assign_from_matrix(qb, cells_arr, cmat)
 
 

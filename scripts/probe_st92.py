@@ -95,7 +95,6 @@ def run_variant(spark, emb, k: int, hier: bool, threshold: int):
     from pymongraph_spark.operators.similarity import (
         GRID_SCALE,
         _assign_from_matrix,
-        _centroid_matrix,
         grid_kmeans_cells_fast,
         grid_seeds,
         quantize_arr,
@@ -107,8 +106,7 @@ def run_variant(spark, emb, k: int, hier: bool, threshold: int):
             ca, cm, fcb = hierarchical_codebook(e, k_clusters=k, iters=2)
             return lambda qb: assign_hierarchical(qb, ca, cm, fcb)
         qa = quantize_arr(e, "vec_id", "embedding", GRID_SCALE, out="qarr")
-        _, cent = grid_kmeans_cells_fast(qa, grid_seeds(e, k, "vec_id"), 2)
-        ca, cm = _centroid_matrix(cent)
+        _, ca, cm = grid_kmeans_cells_fast(qa, grid_seeds(e, k, "vec_id"), 2)
         return lambda qb: _assign_from_matrix(qb, ca, cm)
 
     base = tempfile.mkdtemp(prefix="probe_st92_")

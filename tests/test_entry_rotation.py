@@ -49,11 +49,14 @@ def test_edited_query_jumps_the_queue(tmp_path, monkeypatch):
 
     entry = _load_entry()
     last = entry._last_gated_round()
+    # each _changed_since_gate call fingerprints the whole registry, so
+    # compute the set once per GATE_FPS.json state, not per candidate
+    changed_before = entry._changed_since_gate(last)
     # pick a CURRENT green: gated most recently and fingerprint-clean
     clean = [
         k
         for k, r in last.items()
-        if r == max(last.values()) and k not in entry._changed_since_gate(last)
+        if r == max(last.values()) and k not in changed_before
     ]
     assert clean, "no fingerprint-clean current greens to tamper with"
     victim = sorted(clean)[0]
@@ -69,13 +72,16 @@ def test_edited_query_jumps_the_queue(tmp_path, monkeypatch):
             os.symlink(os.path.join(REPO, name), tampered / name)
     monkeypatch.setattr(entry, "_REPO_DIR", str(tampered))
     ordered = list(entry.queries())
-    assert victim in entry._changed_since_gate(entry._last_gated_round())
+    # the tampered dir links the same CORRECTNESS files, so this
+    # _last_gated_round() equals ``last``
+    changed_after = entry._changed_since_gate(entry._last_gated_round())
+    assert victim in changed_after
     assert ordered.index(victim) < baseline_pos
     # and it ranks inside the rank-0 block: before every clean green
     first_clean = next(
         i
         for i, k in enumerate(ordered)
-        if k in last and k not in entry._changed_since_gate(last) and k != victim
+        if k in last and k not in changed_after and k != victim
     )
     assert ordered.index(victim) < first_clean
 

@@ -181,15 +181,18 @@ def test_s61_jl_rerank_recall_vs_exact(spark):
 
 
 def test_grid_fast_assignment_matches_slow(spark, sf_small):
-    """The broadcast-matrix assignment (grid_assign_whole_fast /
-    grid_kmeans_cells_fast) must be BIT-IDENTICAL to the exploded-row
-    grid_assign + grid_kmeans_codebook whole-vector path on the real
-    corpus — same integer L2², same (d, cell) tie-break — because d58's
-    oracle replays the slow path's arithmetic step for step."""
+    """The broadcast-matrix Lloyd's + assignment (grid_kmeans_cells_fast)
+    must be BIT-IDENTICAL to the exploded-row grid_assign +
+    grid_kmeans_codebook whole-vector path on the real corpus — same
+    integer L2², same (d, cell) tie-break — because d58's oracle
+    replays the slow path's arithmetic step for step."""
+    import numpy as np
+
     from pymongraph_spark.catalog import load_tables
     from pymongraph_spark.operators.similarity import (
         _WHOLE_VEC,
         GRID_SCALE,
+        _centroid_matrix,
         grid_assign,
         grid_kmeans_cells_fast,
         grid_kmeans_codebook,
@@ -208,12 +211,13 @@ def test_grid_fast_assignment_matches_slow(spark, sf_small):
         (r.vec_id, r.cell)
         for r in grid_assign(qd, cent_slow, _WHOLE_VEC).select("vec_id", "cell").collect()
     }
-    cells_fast, cent_fast = grid_kmeans_cells_fast(qa, seeds, 2)
+    cells_fast, cells_arr, cmat = grid_kmeans_cells_fast(qa, seeds, 2)
     fast = {(r.vec_id, r.cell) for r in cells_fast.collect()}
     assert fast == slow
-    assert {(r.cell, r.dim, r.cv) for r in cent_fast.collect()} == {
-        (r.cell, r.dim, r.cv) for r in cent_slow.collect()
-    }
+    cells_slow, cmat_slow = _centroid_matrix(cent_slow)
+    assert cells_arr.dtype == np.int64 and cmat.dtype == np.int64
+    np.testing.assert_array_equal(cells_arr, cells_slow)
+    np.testing.assert_array_equal(cmat, cmat_slow)
 
 
 def test_grid_fast_assignment_matches_slow_high_k(spark, sf_small):
@@ -221,10 +225,13 @@ def test_grid_fast_assignment_matches_slow_high_k(spark, sf_small):
     (k=40 over the 500-vector corpus ≈ the occupancy SemDeDup targets):
     exercises tie-breaks and empty-cell drops the k=16 gate config may
     never hit."""
+    import numpy as np
+
     from pymongraph_spark.catalog import load_tables
     from pymongraph_spark.operators.similarity import (
         _WHOLE_VEC,
         GRID_SCALE,
+        _centroid_matrix,
         grid_assign,
         grid_kmeans_cells_fast,
         grid_kmeans_codebook,
@@ -244,15 +251,20 @@ def test_grid_fast_assignment_matches_slow_high_k(spark, sf_small):
         .select("vec_id", "cell")
         .collect()
     }
-    cells_fast, _ = grid_kmeans_cells_fast(qa, seeds, 1)
+    cells_fast, cells_arr, cmat = grid_kmeans_cells_fast(qa, seeds, 1)
     assert {(r.vec_id, r.cell) for r in cells_fast.collect()} == slow
+    cells_slow, cmat_slow = _centroid_matrix(cent_slow)
+    np.testing.assert_array_equal(cells_arr, cells_slow)
+    np.testing.assert_array_equal(cmat, cmat_slow)
 
 
 def test_grid_fast_local_matches_distributed(spark, sf_small, monkeypatch):
     """The bounded local Lloyd's tier (KMEANS_LOCAL_MAX, r14) must be
     bit-identical to the distributed mapInPandas loop — cells AND the
-    centroid table — since gated queries (d58/d62/st92/st96) route
+    centroid matrix — since gated queries (d58/d62/st92/st96) route
     through whichever tier the corpus size selects."""
+    import numpy as np
+
     import pymongraph_spark.operators.similarity as sim
     from pymongraph_spark.catalog import load_tables
     from pymongraph_spark.operators.similarity import (
@@ -266,19 +278,18 @@ def test_grid_fast_local_matches_distributed(spark, sf_small, monkeypatch):
     qa = quantize_arr(emb, scale=GRID_SCALE, out="qarr")
     seeds = grid_seeds(emb, 16)
 
-    cells_loc, cent_loc = grid_kmeans_cells_fast(qa, seeds, 2)  # local tier
+    cells_loc, arr_loc, cmat_loc = grid_kmeans_cells_fast(qa, seeds, 2)  # local tier
     monkeypatch.setattr(sim, "KMEANS_LOCAL_MAX", 0)  # force distributed
-    cells_dist, cent_dist = grid_kmeans_cells_fast(qa, seeds, 2)
+    cells_dist, arr_dist, cmat_dist = grid_kmeans_cells_fast(qa, seeds, 2)
     assert {(r.vec_id, r.cell) for r in cells_loc.collect()} == {
         (r.vec_id, r.cell) for r in cells_dist.collect()
     }
-    assert {(r.cell, r.dim, r.cv) for r in cent_loc.collect()} == {
-        (r.cell, r.dim, r.cv) for r in cent_dist.collect()
-    }
+    np.testing.assert_array_equal(arr_loc, arr_dist)
+    np.testing.assert_array_equal(cmat_loc, cmat_dist)
 
 
 def test_grid_fast_assignment_blas_tier_bit_exact(spark):
-    """grid_assign_whole_fast's float64-dgemm tier (r9: the int64 matmul
+    """_assign_from_matrix's float64-dgemm tier (r9: the int64 matmul
     has no BLAS kernel and became d58's super-linear term at k∝n) must
     be bit-identical to int64 arithmetic right up to its 4·dim·M² < 2^53
     guard — including exact distance ties, which must still break to the
@@ -286,7 +297,7 @@ def test_grid_fast_assignment_blas_tier_bit_exact(spark):
     int64 fallback and stay exact."""
     import numpy as np
 
-    from pymongraph_spark.operators.similarity import grid_assign_whole_fast
+    from pymongraph_spark.operators.similarity import _assign_from_matrix
 
     rng = np.random.default_rng(7)
     dim, n, k = 64, 200, 32
@@ -299,11 +310,10 @@ def test_grid_fast_assignment_blas_tier_bit_exact(spark):
             [(i, [int(x) for x in q[i]]) for i in range(n)],
             "vec_id: long, qarr: array<long>",
         )
-        cent = spark.createDataFrame(
-            [(j, d, int(c[j, d])) for j in range(k) for d in range(dim)],
-            "cell: long, dim: long, cv: long",
-        )
-        got = {r.vec_id: r.cell for r in grid_assign_whole_fast(qarr, cent).collect()}
+        cells = np.arange(k, dtype=np.int64)
+        got = {
+            r.vec_id: r.cell for r in _assign_from_matrix(qarr, cells, c).collect()
+        }
         # int64 reference (exact: 4·dim·M² < 2^63 for both bounds below)
         dist = (q * q).sum(1)[:, None] + (c * c).sum(1)[None, :] - 2 * (q @ c.T)
         want = {i: int(dist[i].argmin()) for i in range(n)}
@@ -353,12 +363,22 @@ def test_grid_subspace_fast_matches_slow(spark, sf_small):
 
 
 def test_grid_kmeans_fast_empty_and_single_corpus(spark):
-    """r10 refactor edge case: an empty corpus must yield empty frames
-    with the contract schemas (a 1-D empty numpy matrix crashed the
-    k×dim unpack), and a single vector is its own kept cell."""
+    """r10 refactor edge case: an empty corpus must yield an empty
+    assignment, an empty cell array and a 0-row centroid matrix (a 1-D
+    empty numpy matrix crashed the k×dim unpack), and a single vector
+    is its own kept cell."""
     from pymongraph_spark.operators.dedup import semdedup, semdedup_hierarchical
+    from pymongraph_spark.operators.similarity import (
+        grid_kmeans_cells_fast,
+        grid_seeds,
+        quantize_arr,
+    )
 
     empty = spark.createDataFrame([], "vec_id: long, embedding: array<float>")
+    cells, cells_arr, cmat = grid_kmeans_cells_fast(
+        quantize_arr(empty), grid_seeds(empty, 4), 2
+    )
+    assert cells.count() == 0 and cells_arr.shape == (0,) and cmat.shape[0] == 0
     assert semdedup(empty).count() == 0
     assert semdedup_hierarchical(empty).count() == 0
     one = spark.createDataFrame([(7, [1.0] * 8)], "vec_id: long, embedding: array<float>")
