@@ -159,12 +159,15 @@ class PropertyGraph:
 
     def hydrate_vertices(self, ids: DataFrame) -> DataFrame:
         """Batch vertex hydration (_get_vertex_details, mongraph.py:29-44):
-        the N+1 point-lookup loop becomes a single (broadcastable) join."""
-        return self.vertices.join(F.broadcast(ids.select("id")), on="id", how="inner")
+        the N+1 point-lookup loop becomes a single join. No broadcast
+        hint: a small id list (a literal list, an ego network) is
+        auto-broadcast from its size, while an unbounded one (a promoted
+        k_hop's visited set) must be free to fall back to a shuffle join."""
+        return self.vertices.join(ids.select("id"), on="id", how="inner")
 
     def hydrate_edges(self, ids: DataFrame) -> DataFrame:
         """_get_edge_details (mongraph.py:46-60), same join pattern."""
-        return self.edges.join(F.broadcast(ids.select("id")), on="id", how="inner")
+        return self.edges.join(ids.select("id"), on="id", how="inner")
 
 
 def _as_predicate(predicate, props_col: str = "props") -> Column:

@@ -38,6 +38,7 @@ from pymongraph_spark.graph.model import (
     by_ordinal,
     set_props,
 )
+from pymongraph_spark.graph.traversal import frontier_bfs
 from pymongraph_spark.session import run_concurrently
 
 
@@ -364,40 +365,23 @@ def load_bucketed(spark: SparkSession, table_prefix: str):
 def k_hop_bucketed(
     adjacency: DataFrame, roots, depth: int
 ) -> tuple["DataFrame", "DataFrame"]:
-    """k-hop BFS over the bucketed adjacency table: per hop, one
-    bucket-local semi-probe of adjacency (no shuffle of the edge side)
-    + anti-join against visited. Same semantics as traversal.k_hop.
+    """k-hop BFS over the bucketed adjacency table, through the one k-hop
+    loop (traversal.frontier_bfs: same tiers, same results as
+    traversal.k_hop). Only the incident-edge step is this layout's own:
+    adjacency ⋉ frontier on ``key``: a ``key IN (…)`` filter on a small
+    frontier (bucket pruning), else a bucket-local semi-probe (no shuffle
+    of the edge side), projected to the original edge rows.
     """
-    spark = adjacency.sparkSession
-    if isinstance(roots, DataFrame):
-        frontier = roots.select("id").distinct()
-    else:
-        ids = [int(roots)] if not isinstance(roots, (list, tuple, set)) else [int(r) for r in roots]
-        frontier = spark.createDataFrame([(i,) for i in ids], "id: long")
-    visited = frontier.localCheckpoint(eager=True)
-    edge_levels: list[DataFrame] = []
-    for _ in range(depth):
-        e = adjacency.join(
-            frontier.withColumnRenamed("id", "key"), on="key", how="left_semi"
-        )
-        edge_levels.append(e.localCheckpoint(eager=True))
-        endpoints = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        frontier = endpoints.join(visited, on="id", how="left_anti").localCheckpoint(eager=True)
-        visited = visited.unionByName(frontier).distinct().localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            break
-    if edge_levels:
-        edges = edge_levels[0]
-        for e in edge_levels[1:]:
-            edges = edges.unionByName(e)
-        edges = edges.select(EDGE_FIELDS).dropDuplicates(["id"])
-    else:
-        edges = adjacency.select(EDGE_FIELDS).limit(0)
-    return visited, edges
+    def incident(frontier) -> DataFrame:
+        if isinstance(frontier, list):
+            hit = adjacency.filter(F.col("key").isin(frontier))
+        else:
+            hit = adjacency.join(
+                frontier.withColumnRenamed("id", "key"), on="key", how="left_semi"
+            )
+        return hit.select(EDGE_FIELDS)
+
+    return frontier_bfs(roots, depth, incident, adjacency.select(EDGE_FIELDS).limit(0))
 
 
 def _tag(g: PropertyGraph, ordinal) -> tuple[DataFrame, DataFrame]:

@@ -12,6 +12,13 @@ as a UNION of two equi-joins (src side + dst side) so both stay
 hash-joinable instead of degrading to a nested-loop join. Each iteration
 localCheckpoints to truncate lineage; small frontiers broadcast.
 
+``frontier_bfs`` is the one k-hop loop: ``k_hop`` runs it over the edge
+frame and ``store.k_hop_bucketed`` over the bucketed adjacency, each
+supplying only its incident-edge step. Its frontier tiers are bounded by
+the module constants ``ISIN_LITERAL_THRESHOLD`` and
+``SMALL_FRONTIER_THRESHOLD`` (tests monkeypatch them to force the
+broadcast tier or the distributed promotion on small graphs).
+
 B7 semantics kept: find_neighbors includes the query vertex itself in the
 returned vertex set (both endpoints of each incident edge are returned,
 mongraph.py:243-245); the k-hop loop excludes already-visited vertices
@@ -20,12 +27,23 @@ from the next frontier to guarantee termination.
 
 from __future__ import annotations
 
+import functools
 import json
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pymongraph_spark.graph.model import PropertyGraph, _as_predicate
+from pymongraph_spark.operators.graph_algos import endpoint_ids
+
+# Frontier tiers of frontier_bfs (see k_hop). An IN list is capped at 1k
+# ids because each id becomes a literal duplicated across the src and dst
+# predicates, and tens of thousands of literals stress expression
+# compilation long before driver memory matters; collecting ≤100k longs
+# per level is single-digit MB on the driver.
+ISIN_LITERAL_THRESHOLD = 1_000
+SMALL_FRONTIER_THRESHOLD = 100_000
 
 
 def incident_edges(g: PropertyGraph, frontier: DataFrame) -> DataFrame:
@@ -61,23 +79,13 @@ def find_neighbors(
         # single-vertex case: one scan with a pushable predicate, no join
         v = int(vertex)
         e = g.edges.filter((F.col("src") == v) | (F.col("dst") == v))
-    nbr_ids = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    nbr_ids = endpoint_ids(e).distinct()
     if get_details:
         return g.hydrate_vertices(nbr_ids), e
     return nbr_ids, e
 
 
-def k_hop(
-    g: PropertyGraph,
-    roots,
-    depth: int,
-    small_frontier_threshold: int = 100_000,
-    isin_literal_threshold: int = 1_000,
-) -> tuple[DataFrame, DataFrame]:
+def k_hop(g: PropertyGraph, roots, depth: int) -> tuple[DataFrame, DataFrame]:
     """G2 (_explode_node intent, mongraph.py:252-274): k-hop ego network.
 
     Frontier BFS with a visited set (the reference has none — worst-case
@@ -86,17 +94,13 @@ def k_hop(
 
     Three-tier frontier strategy, chosen per level by frontier size:
 
-    1. ≤ isin_literal_threshold ids — ONE scan of edges with an ``IN``
-       filter pushed into the scan (no shuffle, no join). Capped at 1k
-       because each id becomes a literal duplicated across the src and
-       dst predicates, and tens of thousands of literals stress
-       expression compilation long before driver memory matters.
-    2. ≤ small_frontier_threshold ids — frontier stays a driver-side set
+    1. ≤ ISIN_LITERAL_THRESHOLD ids — ONE scan of edges with an ``IN``
+       filter pushed into the scan (no shuffle, no join).
+    2. ≤ SMALL_FRONTIER_THRESHOLD ids — frontier stays a driver-side set
        (set algebra for visited/dedup is free), but expansion runs as a
        broadcast semi-join pair (incident_edges): the edge side is never
        shuffled and no literal expressions are built. This covers the
-       entire ego-network regime; collecting ≤100k longs per level is
-       single-digit MB on the driver.
+       entire ego-network regime.
     3. beyond — hub explosion: promote to the fully distributed plan
        (broadcast/shuffle semi-joins + anti-join visited + localCheckpoint
        lineage truncation), where frontier and visited live in DataFrames
@@ -105,41 +109,63 @@ def k_hop(
 
     Edge dedup across levels is deferred to one final dropDuplicates.
     """
-    spark = g.vertices.sparkSession
 
-    # --- initialize in driver (fast) mode when roots are enumerable -----
-    frontier_ids: list[int] | None
+    def incident(frontier) -> DataFrame:
+        if isinstance(frontier, list):
+            return g.edges.filter(F.col("src").isin(frontier) | F.col("dst").isin(frontier))
+        return incident_edges(g, frontier)
+
+    return frontier_bfs(roots, depth, incident, g.edges.limit(0))
+
+
+def _expand(e: DataFrame, visited: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One distributed level from its checkpointed incident edges ``e``:
+    endpoint ids → anti-join visited → checkpoint. Returns (frontier,
+    visited)."""
+    frontier = endpoint_ids(e).distinct().join(visited, on="id", how="left_anti")
+    frontier = frontier.localCheckpoint(eager=True)
+    return frontier, visited.unionByName(frontier).distinct().localCheckpoint(eager=True)
+
+
+def frontier_bfs(
+    roots, depth: int, incident: Callable, no_edges: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The k-hop loop (tiers: see k_hop). ``incident(frontier)`` returns
+    the edges touching a frontier given either as a list of at most
+    ISIN_LITERAL_THRESHOLD ids (tier 1) or as an ``id`` DataFrame;
+    ``no_edges`` is the empty edge frame returned when no level ran."""
+    spark = no_edges.sparkSession
+    frontier_df = visited_df = visited_ids = None
     if isinstance(roots, DataFrame):
-        sample = roots.select("id").distinct().limit(small_frontier_threshold + 1).collect()
-        frontier_ids = [r["id"] for r in sample] if len(sample) <= small_frontier_threshold else None
-        frontier_df = roots.select("id").distinct()
+        frontier_df = visited_df = roots.select("id").distinct()
+        sample = frontier_df.limit(SMALL_FRONTIER_THRESHOLD + 1).collect()
+        small = len(sample) <= SMALL_FRONTIER_THRESHOLD
+        frontier_ids = [r["id"] for r in sample] if small else None
     elif isinstance(roots, (list, tuple, set)):
         frontier_ids = [int(r) for r in roots]
-        frontier_df = None
     else:
         frontier_ids = [int(roots)]
-        frontier_df = None
+    if frontier_ids is not None:
+        visited_ids = set(frontier_ids)
 
-    visited_ids: set[int] | None = set(frontier_ids) if frontier_ids is not None else None
-    visited_df = frontier_df
+    def ids_frame(ids) -> DataFrame:
+        return spark.createDataFrame([(i,) for i in ids], "id: long")
+
     edge_levels: list[DataFrame] = []
-
     for _level in range(depth):
+        if frontier_ids is None:
+            e = incident(frontier_df)
+        elif not frontier_ids:
+            break
+        elif len(frontier_ids) <= ISIN_LITERAL_THRESHOLD:
+            e = incident(frontier_ids)
+        else:
+            e = incident(ids_frame(frontier_ids))
+        e = e.localCheckpoint(eager=True)  # one scan; later actions reuse it
+        edge_levels.append(e)
         if frontier_ids is not None:
-            if not frontier_ids:
-                break
-            if len(frontier_ids) <= isin_literal_threshold:
-                e = g.edges.filter(
-                    F.col("src").isin(frontier_ids) | F.col("dst").isin(frontier_ids)
-                )
-            else:
-                e = incident_edges(
-                    g, spark.createDataFrame([(i,) for i in frontier_ids], "id: long")
-                )
-            e = e.localCheckpoint(eager=True)  # one scan; later actions reuse it
-            edge_levels.append(e)
             endpoints = e.select("src", "dst").distinct().limit(
-                small_frontier_threshold + 1
+                SMALL_FRONTIER_THRESHOLD + 1
             ).collect()
             flat = {r["src"] for r in endpoints} | {r["dst"] for r in endpoints}
             # Promote on either bound: pair-count overflow means the limit
@@ -147,57 +173,25 @@ def k_hop(
             # distributed), and id-count overflow means the next frontier
             # would exceed the documented driver cap even though the pair
             # list fit (a pair can contribute two fresh ids).
-            if (
-                len(endpoints) > small_frontier_threshold
-                or len(flat) > small_frontier_threshold
-            ):
-                # hub explosion → promote driver state to DataFrames
-                visited_df = spark.createDataFrame(
-                    [(i,) for i in visited_ids], "id: long"
-                )
-                frontier_df = spark.createDataFrame(
-                    [(i,) for i in frontier_ids], "id: long"
-                )
-                frontier_ids = visited_ids = None
-                # re-run this level distributed
-                e = incident_edges(g, frontier_df)
-                edge_levels[-1] = e.localCheckpoint(eager=True)
-                ep = (
-                    e.select(F.col("src").alias("id"))
-                    .unionByName(e.select(F.col("dst").alias("id")))
-                    .distinct()
-                )
-                frontier_df = ep.join(visited_df, on="id", how="left_anti").localCheckpoint(eager=True)
-                visited_df = visited_df.unionByName(frontier_df).distinct().localCheckpoint(eager=True)
-                if frontier_df.isEmpty():
-                    break
+            if max(len(endpoints), len(flat)) <= SMALL_FRONTIER_THRESHOLD:
+                new_frontier = flat - visited_ids
+                visited_ids |= new_frontier
+                frontier_ids = sorted(new_frontier)
                 continue
-            new_frontier = flat - visited_ids
-            visited_ids |= new_frontier
-            frontier_ids = sorted(new_frontier)
-        else:
-            e = incident_edges(g, frontier_df)
-            edge_levels.append(e.localCheckpoint(eager=True))
-            endpoints_df = (
-                e.select(F.col("src").alias("id"))
-                .unionByName(e.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            frontier_df = endpoints_df.join(visited_df, on="id", how="left_anti").localCheckpoint(eager=True)
-            visited_df = visited_df.unionByName(frontier_df).distinct().localCheckpoint(eager=True)
-            if frontier_df.isEmpty():
-                break
+            # hub explosion → promote driver state to DataFrames; this
+            # level's incident edges are complete, only the collect was cut
+            visited_df = ids_frame(visited_ids)
+            frontier_ids = visited_ids = None
+        frontier_df, visited_df = _expand(e, visited_df)
+        if frontier_df.isEmpty():
+            break
 
     if visited_ids is not None:
-        visited_df = spark.createDataFrame([(i,) for i in sorted(visited_ids)], "id: long")
-    if edge_levels:
-        visited_edges = edge_levels[0]
-        for e in edge_levels[1:]:
-            visited_edges = visited_edges.unionByName(e)
-        visited_edges = visited_edges.dropDuplicates(["id"])
-    else:
-        visited_edges = g.edges.limit(0)
-    return visited_df, visited_edges
+        visited_df = ids_frame(sorted(visited_ids))
+    if not edge_levels:
+        return visited_df, no_edges
+    edges = functools.reduce(DataFrame.unionByName, edge_levels)
+    return visited_df, edges.dropDuplicates(["id"])
 
 
 def induced_subgraph(g: PropertyGraph, vertex_ids: DataFrame) -> PropertyGraph:

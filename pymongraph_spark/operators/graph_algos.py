@@ -7,6 +7,14 @@ Scale notes: each iteration is one shuffle on the edge key; lineage is
 truncated per iteration with localCheckpoint; convergence is detected
 with a count (cheap, reuses the shuffle). Hub skew is handled by AQE
 (skew-join splitting is on in session defaults).
+
+Each edge-frame step exists once, here, also for graph/traversal.py and
+graph/store.py: ``endpoint_ids``, ``both_orientations``,
+``canonical_pairs``, ``message_frame``. Every min-label propagation (CC,
+CC on the bucketed adjacency, both SCC passes) runs
+``_hash_min_fixpoint``, which raises rather than truncate.
+``connected_components`` picks its path from a bounded probe: driver
+union-find at ≤ ``CC_COLLECT_MAX_EDGES`` edges, else the fixpoint.
 """
 
 from __future__ import annotations
@@ -21,10 +29,62 @@ from pyspark.sql import functions as F
 # cheap local path. Tests may lower this to exercise the reliable path.
 RELIABLE_CHECKPOINT_DEPTH = 8
 
-# Edge-count bound under which connected_components callers may opt in to
-# the driver union-find path (~16 bytes/edge collected: 200k edges ≈ 3 MB
-# on the driver — far below any broadcast we already build).
+# Edge-count bound at or under which connected_components solves on the
+# driver by union-find (~16 bytes/edge collected: 200k edges ≈ 3 MB on
+# the driver — far below any broadcast we already build). Tests lower it
+# to exercise the distributed fixpoint on small graphs.
 CC_COLLECT_MAX_EDGES = 200_000
+
+
+def endpoint_ids(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """Columns ``a`` and ``b`` of ``edges`` stacked as one ``id`` column,
+    repeats kept: callers add ``distinct()`` for an id set or group by
+    ``id`` for degrees."""
+    return edges.select(F.col(a).alias("id")).unionByName(
+        edges.select(F.col(b).alias("id"))
+    )
+
+
+def both_orientations(edges: DataFrame, *cols: str) -> DataFrame:
+    """``(src, dst, *cols)`` for every edge and for its reverse — the
+    undirected view of a directed edge frame, duplicates kept."""
+    return edges.select("src", "dst", *cols).unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
+    )
+
+
+def canonical_pairs(edges: DataFrame) -> DataFrame:
+    """Unordered simple-graph pairs ``(u, v)`` with u < v: direction and
+    parallel edges collapse, self-loops drop."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def message_frame(edges: DataFrame) -> DataFrame:
+    """Undirected message frame of a propagation loop, partitioned by
+    ``dst`` (every iteration's join key) and deduplicated WITHIN that
+    exchange (HashPartitioning(dst) satisfies the (src, dst) clustering):
+    the edge side is shuffled once for the whole loop, not per iteration."""
+    return both_orientations(edges).repartition("dst").dropDuplicates(["src", "dst"])
+
+
+def adjacency_message_frame(adjacency: DataFrame, label: str | None = None) -> DataFrame:
+    """message_frame read off the bucketed adjacency (store.save_bucketed:
+    both orientations of every edge, ``key`` = the incident vertex): each
+    row sends from the far endpoint to ``key``. No exchange."""
+    if label is not None:
+        adjacency = adjacency.filter(F.col("label") == label)
+    return adjacency.select(
+        F.when(F.col("key") == F.col("src"), F.col("dst"))
+        .otherwise(F.col("src"))
+        .alias("src"),
+        F.col("key").alias("dst"),
+    )
 
 
 def _cut_lineage(df: DataFrame, iteration: int) -> DataFrame:
@@ -50,46 +110,6 @@ def _cut_lineage(df: DataFrame, iteration: int) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def graphframes_available(spark) -> bool:
-    """Probe for the optional GraphFrames accelerator (SURVEY §1.5):
-    python package importable AND its JVM classes on the classpath.
-    This container ships neither — the DataFrame loops below cover the
-    same semantics at a constant-factor cost on deep traversals."""
-    try:
-        import graphframes  # noqa: F401
-
-        spark._jvm.java.lang.Class.forName("org.graphframes.GraphFrame")
-        return True
-    except Exception:
-        return False
-
-
-def connected_components_gf(vertices: DataFrame, edges: DataFrame) -> DataFrame:
-    """OPT-IN GraphFrames-backed connected components. Raises when the
-    runtime is absent rather than silently routing: GraphFrames labels
-    components with ITS choice of representative id, so results are only
-    interchangeable with ``connected_components`` (min-id labels) after
-    the relabel join below — callers choose explicitly, the gate queries
-    always use the deterministic min-id implementation."""
-    spark = vertices.sparkSession
-    if not graphframes_available(spark):
-        raise NotImplementedError(
-            "graphframes is not installed; use connected_components (same "
-            "semantics, DataFrame fixpoint loop)"
-        )
-    from graphframes import GraphFrame
-
-    gf = GraphFrame(
-        vertices.select("id"), edges.select("src", "dst")
-    ).connectedComponents()
-    # normalize labels to the min vertex id per component so outputs are
-    # drop-in interchangeable with connected_components
-    relabel = gf.groupBy("component").agg(F.min("id").alias("__min_id"))
-    return gf.join(relabel, on="component").select(
-        "id", F.col("__min_id").alias("component")
-    )
-
-
 def degrees(edges: DataFrame) -> DataFrame:
     """(id, in_degree, out_degree, degree) for every endpoint."""
     out_d = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("out_degree"))
@@ -106,87 +126,47 @@ def degrees(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 25,
-    strict: bool = False,
-    collect_max_edges: int | None = None,
+    vertices: DataFrame, edges: DataFrame, max_iter: int = 25
 ) -> DataFrame:
-    """Undirected connected components via hash-min label propagation:
-    every vertex starts as its own component (comp = id) and repeatedly
-    adopts the minimum component id among itself and its neighbors, until
-    a fixpoint. Returns (id, component) where component = min vertex id
-    in the component — deterministic.
+    """Undirected connected components: (id, component) with component =
+    the min vertex id of the component — deterministic. One row per id
+    of ``vertices``; an edge endpoint missing from ``vertices`` still
+    joins the components it touches but gets no row of its own. Both
+    paths below follow that rule and return identical rows.
 
-    Convergence needs one iteration per hop of the longest min-label
-    propagation path (≈ component diameter). ``strict=True`` raises if
-    ``max_iter`` is exhausted before the fixpoint instead of returning a
-    partially-propagated labeling — oracle-gated callers use this so a
-    pathological diameter fails loudly, never silently wrong. Early exit
-    makes a generous max_iter free on well-behaved graphs.
-
-    ``collect_max_edges`` (optimization r14, guide §1.2): when set and
-    the edge count is within the bound, the components are solved by a
-    driver-side union-find over the collected edge list instead of the
-    job-per-iteration fixpoint — identical min-id labels, exact, no
-    iteration budget. The near-dup pair-graph callers opt in: their edge
-    frames hold only docs with ≥1 near-dup (a few hundred rows at bench
-    scale, where the distributed loop is ~6 Spark jobs of pure
-    scheduling overhead — measured 1.3s → ~0.15s inside t107), and the
-    bound caps driver memory at ~16 bytes/edge (200k edges ≈ 3 MB).
-    Above the bound the distributed loop runs unchanged, so this is a
-    small-side special case, not a scalability assumption.
+    A bounded probe, one job (ADVICE r14), picks the path:
+    ``limit(CC_COLLECT_MAX_EDGES + 1).collect()`` tests the bound and
+    fetches the edge list. At or under it a driver union-find solves the
+    components exactly; near-dup pair graphs hold a few hundred edges at
+    bench scale, where the loop is ~6 jobs of scheduling overhead
+    (measured 1.3s → ~0.15s inside t107). Above it the hash-min fixpoint
+    runs: one iteration per hop of the longest min-label path (≈ the
+    component diameter); exhausting ``max_iter`` raises, and the early
+    exit makes a generous budget free on well-behaved graphs.
     """
-    if collect_max_edges is not None:
-        # bounded PROBE, one job (ADVICE r14): limit(bound+1).collect()
-        # both tests the bound and fetches the edge list — the former
-        # count()+collect() pair cost two jobs (and the count was a full
-        # recompute for non-checkpointed callers); an oversize input now
-        # pays a truncated scan and falls through to the distributed loop
-        probe = edges.select("src", "dst").limit(collect_max_edges + 1).collect()
-        if len(probe) <= collect_max_edges:
-            return _collected_components(vertices, probe)
-    # Undirected message graph: both directions. Partition by dst — the
-    # key every iteration's join uses — and dedup WITHIN that exchange
-    # (HashPartitioning(dst) satisfies the dedup's (src,dst) clustering),
-    # so the edge side is shuffled exactly once for the whole loop and
-    # each iteration exchanges only the vertex-sized comp frame. At
-    # 100 TB that is the difference between one edge shuffle total and
-    # one per iteration.
-    und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-
-    comp, converged = _hash_min_fixpoint(
-        vertices.select("id"), und, "dst", "src", "component", max_iter
-    )
-    und.unpersist()
-    if strict and not converged:
-        raise RuntimeError(
-            f"connected_components did not reach a fixpoint in {max_iter} "
-            "iterations (component diameter exceeds the budget); raise "
-            "max_iter rather than consuming a partially-propagated labeling"
+    probe = edges.select("src", "dst").limit(CC_COLLECT_MAX_EDGES + 1).collect()
+    if len(probe) <= CC_COLLECT_MAX_EDGES:
+        return _collected_components(vertices, probe)
+    und = message_frame(edges).persist()
+    try:
+        return _hash_min_fixpoint(
+            vertices, und, "dst", "src", "component", max_iter, "connected_components"
         )
-    return comp
+    finally:
+        und.unpersist()
 
 
 def _collected_components(vertices: DataFrame, edge_rows: list) -> DataFrame:
-    """Driver union-find over a bounded, ALREADY-COLLECTED edge list (see
-    connected_components.collect_max_edges). Labels are the min vertex id
+    """Driver union-find over a bounded, ALREADY-COLLECTED edge list (the
+    small side of connected_components). Labels are the min vertex id
     per component — bit-identical to the hash-min fixpoint. Vertices that
-    touch no edge keep their own id via the coalesce, so the output
-    covers exactly ``vertices`` like the distributed path.
+    touch no edge keep their own id via the coalesce, and the left join
+    from ``vertices`` drops endpoints missing from it after they have
+    joined their components: the output covers exactly ``vertices``.
 
-    Preconditions (ADVICE r14): ids must be ordered/comparable (min-id
-    labeling), and edge endpoints should reference ``vertices`` — an
-    endpoint absent from ``vertices`` contributes to labeling (exactly
-    like the distributed unionByName of both endpoint columns) but emits
-    no output row of its own. The label frame's schema is derived from
-    the vertices' id type rather than hardcoding long."""
+    Ids must be ordered/comparable (min-id labeling). The label frame's
+    schema is derived from the vertices' id type rather than hardcoding
+    long."""
     spark = vertices.sparkSession
     id_type = vertices.schema["id"].dataType.simpleString()
     parent: dict = {}
@@ -212,7 +192,7 @@ def _collected_components(vertices: DataFrame, edge_rows: list) -> DataFrame:
             parent[rb] = ra
     labels = [(v, find(v)) for v in nodes]
     # no broadcast hint: comp_df is a LocalRelation whose exact size the
-    # planner knows (bounded by collect_max_edges), so auto-broadcast
+    # planner knows (bounded by CC_COLLECT_MAX_EDGES), so auto-broadcast
     # picks BHJ on its own — and the t71 plan lint forbids forced hints
     # on the cluster join (cluster membership is unbounded in general;
     # THIS path is the bounded special case)
@@ -231,42 +211,19 @@ def connected_components_adjacency(
     adjacency: DataFrame,
     label: str | None = None,
     max_iter: int = 25,
-    strict: bool = False,
 ) -> DataFrame:
-    """connected_components over a pre-materialized adjacency layout
-    (graph/store.save_bucketed): rows (key, src, dst, label) holding BOTH
-    orientations of every edge with ``key`` = the incident vertex.
-
-    The adjacency table IS the symmetrized, deduplicated message frame
-    the generic operator rebuilds per call (union + repartition + dedup
-    — two edge-sized shuffles), so this variant's edge side is a plain
-    bucketed scan: ZERO edge shuffles per call. At 100 TB the adjacency
-    is written once and every fixpoint algorithm reuses it; measured 3×
-    faster than the generic build at sf0.1 (1.9s vs 6.4s per call).
-    """
-    und = adjacency
-    if label is not None:
-        und = und.filter(F.col("label") == label)
-    # neighbor → incident vertex: label flows from the far endpoint to key.
-    und = und.select(
-        F.when(F.col("key") == F.col("src"), F.col("dst"))
-        .otherwise(F.col("src"))
-        .alias("src"),
-        F.col("key").alias("dst"),
-    ).persist()
+    """connected_components' fixpoint (same rows) over the bucketed
+    adjacency layout, which IS the message frame the generic operator
+    rebuilds per call with an edge shuffle: zero edge shuffles here,
+    measured 3× faster at sf0.1 (1.9s vs 6.4s per call)."""
+    und = adjacency_message_frame(adjacency, label).persist()
     try:
-        comp, converged = _hash_min_fixpoint(
-            vertices.select("id"), und, "dst", "src", "component", max_iter
+        return _hash_min_fixpoint(
+            vertices, und, "dst", "src", "component", max_iter,
+            "connected_components_adjacency",
         )
     finally:
         und.unpersist()
-    if strict and not converged:
-        raise RuntimeError(
-            f"connected_components_adjacency did not reach a fixpoint in "
-            f"{max_iter} iterations; raise max_iter rather than consuming "
-            "a partially-propagated labeling"
-        )
-    return comp
 
 
 def _hash_min_fixpoint(
@@ -276,39 +233,49 @@ def _hash_min_fixpoint(
     to_col: str,
     label_name: str,
     max_iter: int,
-) -> tuple[DataFrame, bool]:
+    op: str,
+) -> DataFrame:
     """Shared hash-min label-propagation loop: labels start as vertex ids
     and flow ``from_col`` → ``to_col`` (callers pick the orientation:
     connected_components sends dst→src over the symmetrized frame, the
     SCC passes use src→dst / dst→src over the directed frame). Each
     iteration is ONE join + ONE min-aggregate: neighbor messages unioned
     with the self message collapse the least()/coalesce join of the
-    classic formulation. Convergence detection exploits that hash-min
-    labels are monotonically non-increasing: the total Σlabel strictly
-    decreases on any change, so a plain aggregate over the checkpointed
-    result — no new-vs-old comparison join — detects the fixpoint
-    (decimal sum: exact for full-range 64-bit hash ids, where a wrapped
-    long sum could in principle collide across iterations). Returns
-    (labels, converged) — CALLERS decide whether an unconverged result
-    is an error; consuming one silently is how wrong answers happen."""
-    lbl = vertices.select("id", F.col("id").alias(label_name)).localCheckpoint(eager=True)
-    prev_sum, converged = None, False
+    classic formulation. An endpoint missing from ``vertices`` relays
+    labels, but a flag carried through the aggregate drops its row.
+
+    Hash-min labels only decrease, so one aggregate over the checkpointed
+    result — no new-vs-old join — detects the fixpoint: the row count (a
+    relay reached for the first time adds a row) and Σlabel (decimal:
+    exact for 64-bit hash ids). Exhausting ``max_iter`` raises, naming
+    ``op``: a truncated labeling splits components silently."""
+    lbl = vertices.select(
+        "id", F.col("id").alias(label_name), F.lit(True).alias("__v")
+    ).localCheckpoint(eager=True)
+    prev = None
     for it in range(max_iter):
         msgs = edges.join(lbl, edges[from_col] == lbl.id).select(
-            edges[to_col].alias("id"), F.col(label_name)
+            edges[to_col].alias("id"), F.col(label_name), F.lit(False).alias("__v")
         )
         lbl = _cut_lineage(
             msgs.unionByName(lbl)
             .groupBy("id")
-            .agg(F.min(label_name).alias(label_name)),
+            .agg(F.min(label_name).alias(label_name), F.max("__v").alias("__v")),
             it,
         )
-        cur_sum = lbl.agg(F.sum(F.col(label_name).cast("decimal(38,0)"))).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    return lbl, converged
+        cur = tuple(
+            lbl.agg(
+                F.count(F.lit(1)), F.sum(F.col(label_name).cast("decimal(38,0)"))
+            ).collect()[0]
+        )
+        if cur == prev:
+            return lbl.filter("__v").select("id", label_name)
+        prev = cur
+    raise RuntimeError(
+        f"{op} did not reach a fixpoint in {max_iter} iterations (the "
+        "propagation path is longer than the budget); raise max_iter rather "
+        "than consume a partially-propagated labeling"
+    )
 
 
 def pagerank(
@@ -440,11 +407,7 @@ def bfs_distances(
     _explode_node (mongraph.py:252-274) re-expands shared neighbors
     exponentially; this loop touches each vertex once.
     """
-    adj = edges.select("src", "dst")
-    if undirected:
-        adj = adj.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+    adj = both_orientations(edges) if undirected else edges.select("src", "dst")
     adj = adj.distinct().persist()
 
     spark = edges.sparkSession
@@ -482,20 +445,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     on skewed (power-law) graphs instead of O(max_degree). Each triangle
     is found exactly once, then exploded to credit all three corners.
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    canon = canonical_pairs(edges)
     # canon/oriented are deliberately NOT persisted: both branches of each
     # self-use contain the identical distinct-exchange subtree, which AQE
     # reuses (ReusedExchange), and an explicit persist would pin an
     # edge-scale frame in executor storage until session end.
     deg = (
-        canon.select(F.col("u").alias("id"))
-        .unionByName(canon.select(F.col("v").alias("id")))
+        endpoint_ids(canon, "u", "v")
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
@@ -548,11 +504,7 @@ def shortest_paths_weighted(
     """
     adj = edges.select("src", "dst", F.col(weight_col).alias("w"))
     if undirected:
-        adj = adj.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), F.col(weight_col).alias("w")
-            )
-        )
+        adj = both_orientations(adj, "w")
     # parallel edges: only the cheapest matters
     adj = adj.groupBy("src", "dst").agg(F.min("w").alias("w")).persist()
 
@@ -601,18 +553,10 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 50) -> DataFrame:
     semi-joins, lineage cut per round. Rounds are bounded by the peeling
     depth (the graph's degeneracy ordering), usually far below max_iter.
     """
-    live = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    live = canonical_pairs(edges).localCheckpoint(eager=True)
     for it in range(max_iter):
         deg = (
-            live.select(F.col("u").alias("id"))
-            .unionByName(live.select(F.col("v").alias("id")))
+            endpoint_ids(live, "u", "v")
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
@@ -626,11 +570,7 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 50) -> DataFrame:
             live = pruned
             break
         live = pruned
-    return (
-        live.select(F.col("u").alias("id"))
-        .unionByName(live.select(F.col("v").alias("id")))
-        .distinct()
-    )
+    return endpoint_ids(live, "u", "v").distinct()
 
 
 def label_propagation(
@@ -652,14 +592,7 @@ def label_propagation(
     map-side — then argmax per id), lineage cut per round. Isolated
     vertices keep their own label via the left join.
     """
-    und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
+    und = message_frame(edges.filter(F.col("src") != F.col("dst"))).persist()
     labels = vertices.select("id", F.col("id").alias("community")).localCheckpoint(
         eager=True
     )
@@ -707,10 +640,8 @@ def strongly_connected_components(
     whose min id is also the min over both of its reach basins (plus
     all trimmable singletons), so long chains of SCCs can need one
     round per chain link — ``max_rounds`` bounds that and the function
-    RAISES when exhausted. The inner propagations are strict: a label
-    fixpoint not reached within ``max_iter`` iterations (needed ≈ the
-    largest SCC's diameter) raises instead of peeling from a truncated
-    labeling, which would silently split big cycles into wrong pieces.
+    RAISES when exhausted. Each propagation needs ≈ the largest SCC's
+    diameter in iterations and raises past ``max_iter``.
 
     Returns (id, component) with component = min vertex id of the SCC —
     deterministic. State shrinks every round as SCCs peel off; the
@@ -722,18 +653,6 @@ def strongly_connected_components(
     live = live.localCheckpoint(eager=True)
     out: DataFrame | None = None
     spark = vertices.sparkSession
-
-    def _strict_minprop(verts: DataFrame, es: DataFrame, direction: str) -> DataFrame:
-        frm, to = ("src", "dst") if direction == "fwd" else ("dst", "src")
-        lbl, converged = _hash_min_fixpoint(verts, es, frm, to, "lbl", max_iter)
-        if not converged:
-            raise RuntimeError(
-                f"SCC {direction} label propagation did not reach a fixpoint "
-                f"in {max_iter} iterations (largest SCC diameter exceeds the "
-                "budget); raise max_iter — peeling from a truncated labeling "
-                "would return wrong components"
-            )
-        return lbl
 
     for _ in range(max_rounds):
         if remaining.isEmpty():
@@ -755,8 +674,9 @@ def strongly_connected_components(
                 live.join(trimmed.select(F.col("id").alias("src")), on="src", how="left_anti")
                 .join(trimmed.select(F.col("id").alias("dst")), on="dst", how="left_anti")
             )
-            fwd = _strict_minprop(core, core_edges, "fwd")
-            bwd = _strict_minprop(core, core_edges, "bwd")
+            op = "strongly_connected_components"
+            fwd = _hash_min_fixpoint(core, core_edges, "src", "dst", "lbl", max_iter, op)
+            bwd = _hash_min_fixpoint(core, core_edges, "dst", "src", "lbl", max_iter, op)
             both = fwd.join(
                 bwd.select(F.col("id"), F.col("lbl").alias("blbl")), on="id"
             )

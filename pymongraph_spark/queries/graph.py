@@ -34,6 +34,7 @@ from pymongraph_spark.graph.model import PropertyGraph
 from pymongraph_spark.graph.store import _gc_grace_seconds
 from pymongraph_spark.graph.traversal import find_neighbors, induced_subgraph, k_hop
 from pymongraph_spark.graph.writes import delete_vertices, upsert_vertices
+from pymongraph_spark.operators.graph_algos import endpoint_ids
 from pymongraph_spark.queries.registry import query
 
 # DuckDB CTEs recomputing the derived graph — prefix for graph oracles.
@@ -325,8 +326,7 @@ def _build_tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
 def g30_degree_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tpch_graph(spark, sf_dir)
     deg = (
-        g.edges.select(F.col("src").alias("id"))
-        .unionByName(g.edges.select(F.col("dst").alias("id")))
+        endpoint_ids(g.edges)
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
@@ -1125,11 +1125,7 @@ def g49_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     co = _part_cooccurrence(t)
-    verts = (
-        co.select(F.col("src").alias("id"))
-        .unionByName(co.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = endpoint_ids(co).distinct()
     return label_propagation(verts, co, max_iter=5)
 
 

@@ -292,25 +292,15 @@ def d49_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure + MIN(root) per node over the identical pair set.
     """
     from pymongraph_spark.operators.dedup import minhash_lsh_pairs_neutral
-    from pymongraph_spark.operators.graph_algos import (
-        CC_COLLECT_MAX_EDGES,
-        connected_components,
-    )
+    from pymongraph_spark.operators.graph_algos import connected_components, endpoint_ids
 
     docs = load_tables(spark, sf_dir)["documents"]
     pairs = minhash_lsh_pairs_neutral(
         docs, n=3, num_hashes=64, bands=16, threshold=0.5
     ).select("doc_id_a", "doc_id_b")
-    verts = (
-        pairs.select(F.col("doc_id_a").alias("id"))
-        .unionByName(pairs.select(F.col("doc_id_b").alias("id")))
-        .distinct()
-    )
+    verts = endpoint_ids(pairs, "doc_id_a", "doc_id_b").distinct()
     edges = pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-    comp = connected_components(
-        verts, edges, max_iter=200, strict=True,
-        collect_max_edges=CC_COLLECT_MAX_EDGES,
-    )
+    comp = connected_components(verts, edges, max_iter=200)
     return comp.select(
         F.col("id").alias("doc_id"),
         F.col("component").alias("cluster_id"),
@@ -1381,26 +1371,16 @@ def t71_corpus_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-group hash-agg. Nothing materializes the corpus on the driver.
     """
     from pymongraph_spark.operators.dedup import minhash_lsh_pairs_neutral
-    from pymongraph_spark.operators.graph_algos import (
-        CC_COLLECT_MAX_EDGES,
-        connected_components,
-    )
+    from pymongraph_spark.operators.graph_algos import connected_components, endpoint_ids
 
     docs = load_tables(spark, sf_dir)["documents"]
     pairs = (
         minhash_lsh_pairs_neutral(docs, n=3, num_hashes=64, bands=16, threshold=0.5)
         .select("doc_id_a", "doc_id_b")
     )
-    verts = (
-        pairs.select(F.col("doc_id_a").alias("id"))
-        .unionByName(pairs.select(F.col("doc_id_b").alias("id")))
-        .distinct()
-    )
+    verts = endpoint_ids(pairs, "doc_id_a", "doc_id_b").distinct()
     edges = pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-    clusters = connected_components(
-        verts, edges, max_iter=200, strict=True,
-        collect_max_edges=CC_COLLECT_MAX_EDGES,
-    ).select(
+    clusters = connected_components(verts, edges, max_iter=200).select(
         F.col("id").alias("doc_id"),
         (F.col("component") == F.col("id")).alias("is_canonical"),
     )
@@ -2877,25 +2857,15 @@ def _d54_oracle() -> str:
 @query("d54_quality_canonical_dedup", oracle=_d54_oracle())
 def d54_quality_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pymongraph_spark.operators.dedup import minhash_lsh_pairs_neutral
-    from pymongraph_spark.operators.graph_algos import (
-        CC_COLLECT_MAX_EDGES,
-        connected_components,
-    )
+    from pymongraph_spark.operators.graph_algos import connected_components, endpoint_ids
 
     docs = load_tables(spark, sf_dir)["documents"]
     pairs = minhash_lsh_pairs_neutral(
         docs, n=3, num_hashes=64, bands=16, threshold=0.5
     ).select("doc_id_a", "doc_id_b")
-    verts = (
-        pairs.select(F.col("doc_id_a").alias("id"))
-        .unionByName(pairs.select(F.col("doc_id_b").alias("id")))
-        .distinct()
-    )
+    verts = endpoint_ids(pairs, "doc_id_a", "doc_id_b").distinct()
     edges = pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-    comp = connected_components(
-        verts, edges, max_iter=200, strict=True,
-        collect_max_edges=CC_COLLECT_MAX_EDGES,
-    )
+    comp = connected_components(verts, edges, max_iter=200)
     stats = docs.select(F.col("doc_id").alias("id"), "n_chars")
     best = F.struct(F.col("n_chars").alias("q"), (-F.col("id")).alias("ni"))
     return (
@@ -5714,10 +5684,7 @@ def t107_pipeline_compose_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_keep_first,
         minhash_lsh_pairs_neutral,
     )
-    from pymongraph_spark.operators.graph_algos import (
-        CC_COLLECT_MAX_EDGES,
-        connected_components,
-    )
+    from pymongraph_spark.operators.graph_algos import connected_components, endpoint_ids
 
     docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
     # the planted ids live at doc_id + 1000000, and BOTH engines share
@@ -5754,11 +5721,7 @@ def t107_pipeline_compose_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs_neutral(surv, n=3, num_hashes=64, bands=16, threshold=0.5)
         .select("doc_id_a", "doc_id_b")
     )
-    verts = (
-        pairs.select(F.col("doc_id_a").alias("id"))
-        .unionByName(pairs.select(F.col("doc_id_b").alias("id")))
-        .distinct()
-    )
+    verts = endpoint_ids(pairs, "doc_id_a", "doc_id_b").distinct()
     edges = pairs.select(
         F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
     )
@@ -5766,10 +5729,7 @@ def t107_pipeline_compose_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anti-join consumers re-run the verts-distinct + label join and
     # measured ~0.3s SLOWER steady-state than one eager materialization.
     noncanon = (
-        connected_components(
-        verts, edges, max_iter=200, strict=True,
-        collect_max_edges=CC_COLLECT_MAX_EDGES,
-    )
+        connected_components(verts, edges, max_iter=200)
         .filter(F.col("component") != F.col("id"))
         .select(F.col("id").alias("doc_id"))
         .localCheckpoint(eager=True)

@@ -24,7 +24,7 @@ def main() -> int:
         dedup_keep_first,
         minhash_lsh_pairs_neutral,
     )
-    from pymongraph_spark.operators.graph_algos import connected_components
+    from pymongraph_spark.operators.graph_algos import connected_components, endpoint_ids
     from pymongraph_spark.queries import QUERIES
     from pymongraph_spark.queries.llm import _T107_PLANT_MOD, _T107_TAIL, _compose_tail
     from pymongraph_spark.session import get_spark
@@ -65,15 +65,11 @@ def main() -> int:
     )
     mark("minhash pairs (checkpointed)")
 
-    verts = (
-        pairs.select(F.col("doc_id_a").alias("id"))
-        .unionByName(pairs.select(F.col("doc_id_b").alias("id")))
-        .distinct()
-    )
+    verts = endpoint_ids(pairs, "doc_id_a", "doc_id_b").distinct()
     edges = pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
     sc.setJobDescription("t107: connected components")
     noncanon = (
-        connected_components(verts, edges, max_iter=200, strict=True)
+        connected_components(verts, edges, max_iter=200)
         .filter(F.col("component") != F.col("id"))
         .select(F.col("id").alias("doc_id"))
         .localCheckpoint(eager=True)

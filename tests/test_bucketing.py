@@ -110,6 +110,53 @@ def test_bucketed_store_khop_matches_generic(spark, sf_small):
         spark.sql("DROP TABLE IF EXISTS bk_store_adjacency")
 
 
+def test_bucketed_khop_matches_khop_through_promotion(spark, monkeypatch):
+    """k_hop_bucketed runs k_hop's loop: with the driver cap lowered so
+    the hub level promotes to the distributed tier mid-traversal, both
+    traversals promote and return the same visited and edge sets."""
+    import pymongraph_spark.graph.traversal as trav
+    from pymongraph_spark.graph.model import PropertyGraph
+    from pymongraph_spark.graph.store import k_hop_bucketed, load_bucketed, save_bucketed
+
+    props = F.create_map().cast("map<string,string>").alias("props")
+    # hub 0 with leaves 1..30; leaf 1 chains on to 100 → 101
+    pairs = [(0, i) for i in range(1, 31)] + [(1, 100), (100, 101)]
+    ids = [*range(31), 100, 101]
+    vertices = spark.createDataFrame([(i,) for i in ids], "id: long").select(
+        "id", F.lit("v").alias("label"), props
+    )
+    edges = spark.createDataFrame(
+        [(n, a, b) for n, (a, b) in enumerate(pairs)], "id: long, src: long, dst: long"
+    ).select("id", "src", "dst", F.lit("e").alias("label"), props)
+    g = PropertyGraph(vertices, edges)
+
+    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+    save_bucketed(g, "bk_promote", buckets=4)
+    try:
+        _, adjacency = load_bucketed(spark, "bk_promote")
+        levels = []
+        orig = trav._expand
+
+        def spy(e, visited):
+            levels.append(1)
+            return orig(e, visited)
+
+        monkeypatch.setattr(trav, "_expand", spy)
+        monkeypatch.setattr(trav, "SMALL_FRONTIER_THRESHOLD", 10)
+        vb, eb = k_hop_bucketed(adjacency, 0, depth=3)
+        assert levels, "k_hop_bucketed never promoted"
+        levels.clear()
+        vg, eg = trav.k_hop(g, 0, depth=3)
+        assert levels, "k_hop never promoted"
+        assert sorted(r["id"] for r in vb.collect()) == sorted(r["id"] for r in vg.collect()) == ids
+        rows = sorted(map(tuple, eb.select("id", "src", "dst").collect()))
+        assert rows == sorted(map(tuple, eg.select("id", "src", "dst").collect()))
+        assert rows == [(n, a, b) for n, (a, b) in enumerate(pairs)]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bk_promote_vertices")
+        spark.sql("DROP TABLE IF EXISTS bk_promote_adjacency")
+
+
 def test_tpch_graph_persisted_across_sessions(spark, sf_small):
     """A second session must find the first session's bucketed graph
     tables and skip the derive-from-TPC-H rebuild: no lineitem scan in

@@ -61,10 +61,15 @@ def test_triangle_count_leaves_no_cached_plans(spark):
     assert _n_cached_plans(spark) == before
 
 
-def test_iterative_graph_algos_release_their_caches(spark):
+def test_iterative_graph_algos_release_their_caches(spark, monkeypatch):
     """connected_components / pagerank persist inside their loops — the
     pairing unpersists must leave the cache manager where it started."""
+    from pymongraph_spark.operators import graph_algos
     from pymongraph_spark.operators.graph_algos import connected_components, pagerank
+
+    # a zero union-find bound sends connected_components through its
+    # persisted fixpoint loop even on this 3-edge graph
+    monkeypatch.setattr(graph_algos, "CC_COLLECT_MAX_EDGES", 0)
 
     verts = spark.createDataFrame([(i,) for i in range(6)], "id: long")
     edges = spark.createDataFrame(

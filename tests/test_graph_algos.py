@@ -7,7 +7,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pymongraph_spark.operators import graph_algos
 from pymongraph_spark.operators.graph_algos import connected_components, degrees, pagerank
+
+
+@pytest.fixture
+def fixpoint(monkeypatch):
+    """Lower the union-find bound so connected_components runs the
+    distributed hash-min fixpoint on these small graphs."""
+    monkeypatch.setattr(graph_algos, "CC_COLLECT_MAX_EDGES", 0)
 
 
 def _vng(spark, n, pairs):
@@ -23,13 +31,13 @@ def _comp_sets(comp_df):
     return sorted(sorted(g) for g in groups.values())
 
 
-def test_cc_two_components_and_singleton(spark):
+def test_cc_two_components_and_singleton(spark, fixpoint):
     v, e = _vng(spark, 7, [(0, 1), (1, 2), (3, 4), (4, 5)])
     comp = connected_components(v, e)
     assert _comp_sets(comp) == [[0, 1, 2], [3, 4, 5], [6]]
 
 
-def test_cc_cycle_and_chain_converges(spark):
+def test_cc_cycle_and_chain_converges(spark, fixpoint):
     # long chain exercises multi-iteration propagation
     v, e = _vng(spark, 8, [(i, i + 1) for i in range(7)])
     comp = connected_components(v, e)
@@ -38,35 +46,69 @@ def test_cc_cycle_and_chain_converges(spark):
     assert {r["component"] for r in comp.collect()} == {0}
 
 
-def test_cc_direction_irrelevant(spark):
+def test_cc_direction_irrelevant(spark, fixpoint):
     v, e = _vng(spark, 4, [(3, 2), (2, 1), (1, 0)])  # edges all "backwards"
     assert _comp_sets(connected_components(v, e)) == [[0, 1, 2, 3]]
 
 
-def test_cc_collected_matches_distributed(spark):
-    """The bounded driver union-find path (collect_max_edges, r14) must
-    produce bit-identical (id, component) labels to the distributed
-    hash-min fixpoint — including singletons, duplicate/backward edges,
-    self-loops, and chains that force multi-level union-find paths."""
+def _cc_rows(v, e, bound, monkeypatch):
+    monkeypatch.setattr(graph_algos, "CC_COLLECT_MAX_EDGES", bound)
+    return sorted(map(tuple, connected_components(v, e).collect()))
+
+
+def test_cc_collected_matches_distributed(spark, monkeypatch):
+    """The bounded driver union-find path must produce bit-identical
+    (id, component) rows to the distributed hash-min fixpoint — including
+    singletons, duplicate/backward edges, self-loops, and chains that
+    force multi-level union-find paths. The bound is inclusive: 8 edges
+    under a bound of 8 take the union-find path, under 7 the fixpoint."""
     edges = [(3, 2), (2, 1), (1, 0), (0, 3), (5, 6), (6, 5), (7, 7), (9, 8)]
     v, e = _vng(spark, 11, edges)
-    dist = {(r["id"], r["component"]) for r in connected_components(v, e).collect()}
-    fast = {
-        (r["id"], r["component"])
-        for r in connected_components(v, e, collect_max_edges=1000).collect()
-    }
-    assert dist == fast
-    # above the bound, the distributed loop must be the one that runs
-    # (the collect path would need the edge list on the driver; equality
-    # of results is what we can assert from the outside)
-    over = {
-        (r["id"], r["component"])
-        for r in connected_components(v, e, collect_max_edges=2).collect()
-    }
-    assert over == dist
+    fixpoint_calls = []
+    orig = graph_algos._hash_min_fixpoint
+
+    def spy(*args):
+        fixpoint_calls.append(args[-1])
+        return orig(*args)
+
+    monkeypatch.setattr(graph_algos, "_hash_min_fixpoint", spy)
+    fast = _cc_rows(v, e, len(edges), monkeypatch)
+    assert fixpoint_calls == []
+    assert _cc_rows(v, e, len(edges) - 1, monkeypatch) == fast
+    assert fixpoint_calls == ["connected_components"]
 
 
-def test_cc_adjacency_matches_generic(spark):
+def test_cc_dangling_endpoint_same_rows_on_both_paths(spark, monkeypatch):
+    """An edge endpoint missing from ``vertices`` joins the components it
+    touches but gets no row: both paths emit exactly one row per vertex.
+    Here 9 is not a vertex yet links 1 to 2, and 7-8 are dangling alone."""
+    v = spark.createDataFrame([(i,) for i in (0, 1, 2, 3)], "id: long")
+    e = spark.createDataFrame(
+        [(0, 1), (1, 9), (9, 2), (7, 8)], "src: long, dst: long"
+    )
+    expected = [(0, 0), (1, 0), (2, 0), (3, 3)]
+    assert _cc_rows(v, e, 1000, monkeypatch) == expected
+    assert _cc_rows(v, e, 0, monkeypatch) == expected
+
+
+def test_cc_exhausted_max_iter_raises(spark, fixpoint):
+    """A budget shorter than the propagation path raises (naming the
+    operator and max_iter) instead of returning partial labels — on the
+    edge frame and on the bucketed adjacency alike."""
+    from pymongraph_spark.operators.graph_algos import connected_components_adjacency
+
+    v, e = _vng(spark, 8, [(i, i + 1) for i in range(7)])
+    with pytest.raises(RuntimeError, match="connected_components did not .* raise max_iter"):
+        connected_components(v, e, max_iter=3)
+    adjacency = e.select(F.col("src").alias("key"), "src", "dst", F.lit("x").alias("label"))
+    adjacency = adjacency.unionByName(
+        e.select(F.col("dst").alias("key"), "src", "dst", F.lit("x").alias("label"))
+    )
+    with pytest.raises(RuntimeError, match="connected_components_adjacency .* raise max_iter"):
+        connected_components_adjacency(v, adjacency, max_iter=3)
+
+
+def test_cc_adjacency_matches_generic(spark, fixpoint):
     """connected_components_adjacency over the bucketed adjacency layout
     must agree exactly with the generic operator on the same subgraph —
     same labels per vertex, both on the 'placed' slice and the full graph."""
@@ -322,14 +364,12 @@ def test_k_core_cascading_removal(spark):
     assert k_core(e, k=2).count() == 0
 
 
-def test_reliable_checkpoint_path_same_result(spark, monkeypatch, tmp_path):
+def test_reliable_checkpoint_path_same_result(spark, monkeypatch, tmp_path, fixpoint):
     # depth 0 sends every iteration through the "deep loop" branch. Without
     # a user-configured checkpoint dir it must STAY on localCheckpoint (a
     # driver-local tempdir fallback would break cross-executor reads on a
     # real cluster); with one configured it upgrades to reliable
     # checkpoint()-to-storage.
-    from pymongraph_spark.operators import graph_algos
-
     v, e = _vng(spark, 8, [(i, i + 1) for i in range(7)])
     expected = _comp_sets(connected_components(v, e))
     monkeypatch.setattr(graph_algos, "RELIABLE_CHECKPOINT_DEPTH", 0)
@@ -342,25 +382,6 @@ def test_reliable_checkpoint_path_same_result(spark, monkeypatch, tmp_path):
     assert _comp_sets(connected_components(v, e)) == expected
     pr = pagerank(v, e, max_iter=3)
     assert abs(sum(r["rank"] for r in pr.collect()) - 8.0) < 1e-6
-
-
-def test_graphframes_probe_and_gate(spark):
-    """The optional accelerator must answer honestly and, when absent,
-    gate loudly instead of silently falling back (callers opt in)."""
-    from pymongraph_spark.operators import graph_algos as ga
-
-    avail = ga.graphframes_available(spark)
-    assert avail in (True, False)
-    v = spark.createDataFrame([(1,), (2,), (3,)], "id: long")
-    e = spark.createDataFrame([(1, 2)], "src: long, dst: long")
-    if not avail:
-        import pytest as _pytest
-
-        with _pytest.raises(NotImplementedError):
-            ga.connected_components_gf(v, e)
-    else:
-        got = {r["id"]: r["component"] for r in ga.connected_components_gf(v, e).collect()}
-        assert got == {1: 1, 2: 1, 3: 3}
 
 
 def test_kmeans_centroids_deterministic_and_shaped(spark, sf_small):
@@ -495,7 +516,7 @@ def test_scc_cycles_and_bridge(spark):
     assert _scc_sets(strongly_connected_components(v, e)) == [[0, 1, 2], [3, 4], [5]]
 
 
-def test_scc_direction_matters_vs_undirected_cc(spark):
+def test_scc_direction_matters_vs_undirected_cc(spark, fixpoint):
     from pymongraph_spark.operators.graph_algos import (
         connected_components,
         strongly_connected_components,

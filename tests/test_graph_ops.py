@@ -207,7 +207,7 @@ def test_g3_build_graph_json_export(spark):
 
 def test_g2_hub_promotes_to_distributed_and_matches(spark, monkeypatch):
     """Hub explosion: when a level's endpoint set exceeds
-    small_frontier_threshold, the loop must promote from driver-side
+    SMALL_FRONTIER_THRESHOLD, the loop must promote from driver-side
     isin() literals to the distributed semi-join plan mid-traversal and
     still produce the identical visited/edge sets."""
     import pymongraph_spark.graph.traversal as trav
@@ -221,14 +221,15 @@ def test_g2_hub_promotes_to_distributed_and_matches(spark, monkeypatch):
     assert "tail" in expected_names and len(expected_names) == 42
 
     promoted = {"flag": False}
-    orig = trav.incident_edges
+    orig = trav._expand
 
-    def spy(graph, frontier):
+    def spy(e, visited):
         promoted["flag"] = True
-        return orig(graph, frontier)
+        return orig(e, visited)
 
-    monkeypatch.setattr(trav, "incident_edges", spy)
-    got_v, got_e = k_hop(g, root, 2, small_frontier_threshold=10)
+    monkeypatch.setattr(trav, "_expand", spy)
+    monkeypatch.setattr(trav, "SMALL_FRONTIER_THRESHOLD", 10)
+    got_v, got_e = k_hop(g, root, 2)
     assert promoted["flag"], "distributed promotion never triggered"
     assert _names_of(g, got_v) == expected_names
     assert got_e.count() == expected_e.count()
@@ -256,11 +257,26 @@ def test_g2_midtier_broadcast_join_matches(spark, monkeypatch):
     monkeypatch.setattr(trav, "incident_edges", spy)
     # isin cap of 5 forces the broadcast tier at level 2 (frontier = 40
     # leaves) while the driver cap of 10k keeps it out of distributed mode
-    got_v, _ = k_hop(
-        g, root, 2, small_frontier_threshold=10_000, isin_literal_threshold=5
-    )
+    monkeypatch.setattr(trav, "SMALL_FRONTIER_THRESHOLD", 10_000)
+    monkeypatch.setattr(trav, "ISIN_LITERAL_THRESHOLD", 5)
+    got_v, _ = k_hop(g, root, 2)
     assert used_join["flag"], "broadcast-join tier never used"
     assert _names_of(g, got_v) == expected_names
+
+
+def test_hydration_leaves_the_join_to_the_planner(spark):
+    """hydrate_vertices/hydrate_edges carry no broadcast hint: an
+    unbounded id frame (a promoted k_hop's visited set) must be free to
+    fall back to a shuffle join, while a small one still auto-broadcasts."""
+    g = _mk_graph(spark, [("v0", "v1"), ("v1", "v2")])
+    ids = g.vertices.select("id")
+    for df in (g.hydrate_vertices(ids), g.hydrate_edges(g.edges.select("id"))):
+        assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
+    literal = spark.createDataFrame([(_id_of(g, "v1"),)], "id: long")
+    hydrated = g.hydrate_vertices(literal)
+    assert [r["props"]["name"] for r in hydrated.collect()] == ["v1"]
+    # the adaptive plan, final after the collect, broadcast the tiny side
+    assert "BroadcastHashJoin" in hydrated._jdf.queryExecution().executedPlan().toString()
 
 
 def test_update_vertices_folds_duplicate_ids(spark):

@@ -214,16 +214,11 @@ def test_cc_edge_frame_single_exchange(spark):
     """Connected components: the undirected message graph must reach its
     cache with exactly ONE Exchange (repartition-by-dst absorbs the dedup
     clustering), so the fixpoint loop never re-shuffles the edge side."""
+    from pymongraph_spark.operators.graph_algos import message_frame
     from pymongraph_spark.queries.graph import tpch_graph
 
     g = tpch_graph(spark, SF_SMALL)
-    e = g.edges.filter(F.col("label") == "placed")
-    und = (
-        e.select("src", "dst")
-        .unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-    )
+    und = message_frame(g.edges.filter(F.col("label") == "placed"))
     assert _plan(und).count("Exchange") == 1
 
 
@@ -232,15 +227,13 @@ def test_cc_adjacency_message_frame_zero_exchange(spark):
     message frame with ZERO exchanges: the bucketed adjacency table is
     already both orientations of every edge, so the frame is a plain
     bucketed scan + projection — no union re-shuffle, no dedup, ever."""
+    from pymongraph_spark.operators.graph_algos import adjacency_message_frame
     from pymongraph_spark.queries.graph import tpch_adjacency
 
     adjacency = tpch_adjacency(spark, SF_SMALL)
     if adjacency is None:
         pytest.skip("bucketed layout unavailable")
-    und = adjacency.filter(F.col("label") == "placed").select(
-        F.when(F.col("key") == F.col("src"), F.col("dst")).otherwise(F.col("src")).alias("src"),
-        F.col("key").alias("dst"),
-    )
+    und = adjacency_message_frame(adjacency, label="placed")
     assert _plan(und).count("Exchange") == 0
 
 
